@@ -6,6 +6,13 @@ predicate of the ``userboxes`` filter passes and rejects a fixed share
 of events (``SHARES``), and titles repeat so the dedup drops some
 matches.  ``expected_flags`` re-derives the filter's decisions in plain
 Python, independently of the Spark code under test.
+
+The shares are not measured from Wikimedia traffic.  They are chosen so
+that every predicate both passes and rejects events while about 17% of
+events (the product of the shares) reach the revision-text join and
+half of those match, so that every stage of the pipeline — source,
+filter, both stream-static joins, regex, dedup state and sink — does
+work in every micro-batch.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Write the per-layer table (LAYERS.md) for all three workloads.
 
-    python3 perfbench/layers.py [--seed N] [--seconds S] [--out perfbench/LAYERS.md]
+    python3 perfbench/layers.py [--seed N] [--seconds S]
 
 Runs each workload once untraced and once traced (``run.py``), then
 tabulates the end-to-end metrics of the untraced run, every per-layer
@@ -68,7 +68,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=SPEC["run_seconds"])
-    ap.add_argument("--out", default=os.path.join(HERE, "LAYERS.md"))
     a = ap.parse_args()
 
     plain = {w: _record(w, a.seed, a.seconds, 0) for w in WORKLOADS}
@@ -118,7 +117,7 @@ def main() -> None:
         moves, where = next((v for p, v in MOVES.items() if k.startswith(p)), ("", ""))
         lines.append(f"| `{k}` | {moves} | {where} | " + " | ".join(
             _fmt(traced[w]["result"]["layers"].get(k)) for w in WORKLOADS) + " |")
-    with open(a.out, "w") as f:
+    with open(os.path.join(HERE, "LAYERS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
 
 

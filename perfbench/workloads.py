@@ -350,7 +350,7 @@ def run_stream(cfg: dict) -> dict:
     progress: dict[int, dict] = {}
     committed = 0
     ready = None
-    deadline = time.time() + cfg["lead_s"] + cfg["seconds"] + cfg["drain_s"] + 30
+    deadline = time.time() + cfg["lead_s"] + cfg["seconds"] + cfg["drain_s"] + cfg["grace_s"]
     try:
         while committed < n and time.time() < deadline and query.exception() is None:
             time.sleep(0.25)
@@ -412,6 +412,11 @@ def run_stream(cfg: dict) -> dict:
             "rate": rate,
             "events": n,
             "measured_batches": len(measured),
+            # (events, triggerExecution ms) of every micro-batch with input
+            "batches": [
+                [p["numInputRows"], p["durationMs"]["triggerExecution"]]
+                for p in sorted(progress.values(), key=lambda p: p["batchId"])
+            ],
             "flagged_titles": len({r["title"] for r in flags}),
         },
         "layers": {
