@@ -95,7 +95,7 @@ def load_tuned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #       ordering failed that test on the r14 opening tree until this
 #       re-emit.
 
-#   r15 (THIS ordering, re-emitted by tools/rotate_prefix.py
+#   r15 (re-emitted by tools/rotate_prefix.py
 #       --slots 50 on the r15 tree): first use of the TOUCHED tier
 #       (r14 verdict item 3): queries whose implementation — any
 #       top-level symbol their query fn transitively references, by
@@ -112,58 +112,19 @@ def load_tuned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #       (audited by test_rotation_ledger.py); untouched rows-only
 #       entries sink to the registry tail instead of drifting into
 #       the prefix with the staleness drain.
+#   r16 (THIS ordering, re-emitted by tools/rotate_prefix.py
+#       --slots 50 against CORRECTNESS_r15): the ten queries touched
+#       since their newest driver row lead (ann_ivf_topk,
+#       dedup_containment and dedup_keep_best get their post-rewrite
+#       hash rows), then the staleness drain of the r6-era rows.
+#       Every rows-only entry already has a driver row and none is
+#       touched, so _PREFIX_ROWS_ONLY_REVERIFY is empty.
 _VERIFICATION_PRIORITY: tuple[str, ...] = (
-    "ann_lsh_bucketed",  # rows_only TOUCHED-last-round, row r6
-    "ann_recall_eval",  # green TOUCHED-last-round, row r6
-    "dedup_minhash_lsh",  # rows_only TOUCHED-last-round, row r6
-    "dedup_simhash",  # rows_only TOUCHED-last-round, row r6
-    "embed_random_projection",  # green TOUCHED-last-round, row r6
-    "graph_kcore",  # green TOUCHED-last-round, row r6
-    "join_bloom_pruned",  # green TOUCHED-last-round, row r6
-    "basket_association_rules",  # green TOUCHED-last-round, row r7
-    "dedup_minhash_accuracy",  # green TOUCHED-last-round, row r7
-    "embed_dim_truncation_fidelity",  # green TOUCHED-last-round, row r7
-    "embed_pair_distance_hist",  # green TOUCHED-last-round, row r7
-    "graph_degree_assortativity",  # green TOUCHED-last-round, row r7
-    "graph_hits_bipartite",  # green TOUCHED-last-round, row r7
-    "graph_label_propagation",  # green TOUCHED-last-round, row r7
-    "graph_local_bridges",  # green TOUCHED-last-round, row r7
-    "graph_reach_2hop",  # green TOUCHED-last-round, row r7
-    "graph_clustering_coefficient",  # green TOUCHED-last-round, row r9
-    "stats_spearman",  # green TOUCHED-last-round, row r10
-    "text_novelty_decay",  # green TOUCHED-last-round, row r10
-    "graph_community_modularity",  # green TOUCHED-last-round, row r11
-    "tfidf_top_terms",  # green TOUCHED-last-round, row r11
-    "ann_lsh_portable",  # green TOUCHED-last-round, row r12
-    "cluster_kmeans",  # green TOUCHED-last-round, row r12
-    "dedup_cc_clusters",  # green TOUCHED-last-round, row r12
-    "dedup_cluster_purity",  # green TOUCHED-last-round, row r12
-    "dedup_minhash_portable",  # green TOUCHED-last-round, row r12
-    "dedup_prefix_jaccard",  # green TOUCHED-last-round, row r12
-    "dedup_semantic",  # green TOUCHED-last-round, row r12
-    "dedup_simhash_portable",  # green TOUCHED-last-round, row r12
-    "graph_pagerank",  # green TOUCHED-last-round, row r12
-    "orders_next_order_affinity",  # green TOUCHED-last-round, row r12
-    "events_haar_energy",  # green TOUCHED-last-round, row r13
-    "events_markov_stationary",  # green TOUCHED-last-round, row r13
-    "agg_filtered",  # green TOUCHED since r6
-    "agg_ks_drift",  # green TOUCHED since r6
-    "agg_ttest_welch",  # green TOUCHED since r6
-    "agg_weighted_median",  # green TOUCHED since r6
-    "dedup_tfidf_cosine",  # green TOUCHED since r6
-    "dedup_winnowing",  # green TOUCHED since r6
-    "embed_centroid_outliers",  # green TOUCHED since r6
-    "events_ab_bucketing",  # green TOUCHED since r6
-    "events_mad_anomaly",  # green TOUCHED since r6
-    "join_asof_tolerance",  # green TOUCHED since r6
-    "pack_bins_bfd",  # rows_only TOUCHED since r6
-    "split_leakage_safe",  # green TOUCHED since r6
-    "stats_mann_whitney",  # green TOUCHED since r7
-    "join_asof_nearest",  # green TOUCHED since r9
-    "dedup_ngram_jaccard",  # green TOUCHED since r10
-    "orders_basket_lift",  # green TOUCHED since r11
-    "stats_bh_fdr",  # green TOUCHED since r11
-    # ---- entries below are outside the 50-slot prefix ----
+    "ann_ivf_topk",  # green TOUCHED-last-round, row r14
+    "ann_ivfpq_topk",  # green TOUCHED-last-round, row r14
+    "dedup_containment",  # green TOUCHED-last-round, row r14
+    "dedup_keep_best",  # green TOUCHED-last-round, row r14
+    "sample_cluster_balanced",  # green TOUCHED-last-round, row r14
     "agg_trimmed_mean",  # green TOUCHED since r12
     "events_lateness_profile",  # green TOUCHED since r12
     "stats_cochran_q",  # green TOUCHED since r12
@@ -209,6 +170,7 @@ _VERIFICATION_PRIORITY: tuple[str, ...] = (
     "events_local_peaks",  # green r7
     "events_max_drawdown",  # green r7
     "events_threshold_suggest",  # green r7
+    # ---- entries below are outside the 50-slot prefix ----
     "events_top_paths",  # green r7
     "filter_rejection_funnel",  # green r7
     "llm_prep_pipeline_v2",  # green r7
@@ -463,15 +425,11 @@ _VERIFICATION_PRIORITY: tuple[str, ...] = (
     "window_rolling_median",  # green r13
     "agg_argmax",  # green r14
     "agg_group_quantiles",  # green r14
-    "ann_ivf_topk",  # green r14
-    "ann_ivfpq_topk",  # green r14
     "ann_pq_topk",  # green r14
     "basket_part_pairs",  # green r14
     "batch_length_buckets",  # green r14
     "bootstrap_ci_mean",  # green r14
     "cdc_snapshot_diff",  # green r14
-    "dedup_containment",  # green r14
-    "dedup_keep_best",  # green r14
     "dedup_pair_explain",  # green r14
     "dedup_rate_by_source",  # green r14
     "dedup_substring_spans",  # green r14
@@ -493,7 +451,6 @@ _VERIFICATION_PRIORITY: tuple[str, ...] = (
     "profile_key_skew",  # green r14
     "profile_quality_by_source",  # green r14
     "retrieval_rrf_fusion",  # green r14
-    "sample_cluster_balanced",  # green r14
     "sample_poisson_bootstrap",  # green r14
     "sample_temperature_mix",  # green r14
     "sample_uniform_k",  # green r14
@@ -511,21 +468,64 @@ _VERIFICATION_PRIORITY: tuple[str, ...] = (
     "tpch_q12ish",  # green r14
     "window_first_last",  # green r14
     "window_period_over_period",  # green r14
+    "agg_filtered",  # green r15
+    "agg_ks_drift",  # green r15
+    "agg_ttest_welch",  # green r15
+    "agg_weighted_median",  # green r15
+    "ann_lsh_portable",  # green r15
+    "ann_recall_eval",  # green r15
+    "basket_association_rules",  # green r15
+    "cluster_kmeans",  # green r15
+    "dedup_cc_clusters",  # green r15
+    "dedup_cluster_purity",  # green r15
+    "dedup_minhash_accuracy",  # green r15
+    "dedup_minhash_portable",  # green r15
+    "dedup_ngram_jaccard",  # green r15
+    "dedup_prefix_jaccard",  # green r15
+    "dedup_semantic",  # green r15
+    "dedup_simhash_portable",  # green r15
+    "dedup_tfidf_cosine",  # green r15
+    "dedup_winnowing",  # green r15
+    "embed_centroid_outliers",  # green r15
+    "embed_dim_truncation_fidelity",  # green r15
+    "embed_pair_distance_hist",  # green r15
+    "embed_random_projection",  # green r15
+    "events_ab_bucketing",  # green r15
+    "events_haar_energy",  # green r15
+    "events_mad_anomaly",  # green r15
+    "events_markov_stationary",  # green r15
+    "graph_clustering_coefficient",  # green r15
+    "graph_community_modularity",  # green r15
+    "graph_degree_assortativity",  # green r15
+    "graph_hits_bipartite",  # green r15
+    "graph_kcore",  # green r15
+    "graph_label_propagation",  # green r15
+    "graph_local_bridges",  # green r15
+    "graph_pagerank",  # green r15
+    "graph_reach_2hop",  # green r15
+    "join_asof_nearest",  # green r15
+    "join_asof_tolerance",  # green r15
+    "join_bloom_pruned",  # green r15
+    "orders_basket_lift",  # green r15
+    "orders_next_order_affinity",  # green r15
+    "split_leakage_safe",  # green r15
+    "stats_bh_fdr",  # green r15
+    "stats_mann_whitney",  # green r15
+    "stats_spearman",  # green r15
+    "text_novelty_decay",  # green r15
+    "tfidf_top_terms",  # green r15
     "multimodal_phash_neardup",  # rows_only r6
     "text_compression_ratio",  # rows_only r6
     "embed_pca_variance",  # rows_only r13
+    "ann_lsh_bucketed",  # rows_only r15
+    "dedup_minhash_lsh",  # rows_only r15
+    "dedup_simhash",  # rows_only r15
+    "pack_bins_bfd",  # rows_only r15
 )
 
 
 _PREFIX_ROWS_ONLY_REVERIFY: tuple[str, ...] = (
-    "ann_lsh_bucketed",  # touched since rows-only row r6
-    "dedup_minhash_lsh",  # touched since rows-only row r6
-    "dedup_simhash",  # touched since rows-only row r6
-    "pack_bins_bfd",  # touched since rows-only row r6
 )
-
-
-
 
 
 def build_registry() -> dict[str, QuerySpec]:

@@ -5,8 +5,11 @@ multi-executor cluster reading ~100 TB, so every knob set here is the
 cluster-sane default, not a local hack:
 
 - AQE on (runtime coalesce / skew-join mitigation);
-- shuffle partitions sized to the environment (32 locally; on a real
-  cluster you want 2-3x total cores — override via conf);
+- shuffle partitions sized to the environment (``max(16, cores)``
+  locally; on a real cluster you want 2-3x total cores — override via
+  conf).  Batch plans rely on AQE to coalesce them; streaming plans run
+  without AQE, so ``streaming.pipeline.start_flaglog_sink`` starts its
+  query at the session's core count instead;
 - UTC session timezone so timestamp semantics match the oracle and are
   stable across executor hosts;
 - Arrow transfer on for the (rare) Pandas-UDF paths.
@@ -93,10 +96,11 @@ def tune(spark: SparkSession) -> SparkSession:
     # the 200 default — 6x task-launch overhead on local[32]).  This
     # is the AQE INITIAL number: coalescePartitions shrinks small
     # shuffles below it, so on a 1000-executor cluster the
-    # cores-derived value stays right while local stays at 32.
+    # cores-derived value stays right while local stays small.
     # Only the UNTOUCHED Spark default ("200") is replaced: a caller
-    # that set its own value (get_spark's 32, or a cluster driver's
-    # deliberate 2000) keeps it — "override via conf" stays true.
+    # that set its own value (get_spark's max(16, cores), or a
+    # cluster driver's deliberate 2000) keeps it — "override via
+    # conf" stays true.
     try:
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
             par = spark.sparkContext.defaultParallelism

@@ -58,6 +58,12 @@ def build_pipeline(
     ``users``/``revisions`` are static dimension frames -> these joins
     are stream-static (no state, re-planned per micro-batch; broadcast
     when small).
+
+    The dedup's state partition count is fixed once per checkpoint,
+    from the shuffle-partition count its query first started with
+    (``start_flaglog_sink`` starts it at the cores available then); a
+    restart reads it back from the checkpoint.  To change it, start
+    from a new checkpoint.
     """
     if spec.max_edits is not None and users is None:
         # Same contract as the batch twin (scanner.scan): a threshold
@@ -249,7 +255,21 @@ def start_flaglog_sink(
     partition directory (the idempotent-foreachBatch recipe, same as
     the corpus builder) — a plain append would double-write a batch
     that is retried after the files land but before the checkpoint
-    commits."""
+    commits.
+
+    The query starts with ``spark.sql.shuffle.partitions`` set to the
+    session's ``defaultParallelism``, so the dedup state runs one wave
+    of state tasks per micro-batch.  Streaming plans run without AQE,
+    so nothing would coalesce the batch default (``max(16, cores)``):
+    at 16 partitions on 4 cores every trigger ran 16 near-empty state
+    tasks in four waves, each paying its own state-store commit.  The
+    query clones the session inside ``start()``, so the value is
+    scoped to it; the session's own value is restored on return, also
+    when ``start()`` raises.  Spark records the count in the checkpoint's offset log
+    and reads it back on restart: the state partition count is fixed
+    once per checkpoint, from the cores available when that
+    checkpoint was first started (a checkpoint written at 16 keeps
+    16).  To change it, start from a new checkpoint."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -260,10 +280,19 @@ def start_flaglog_sink(
             .json(f"{out_dir}/epoch={epoch_id}")
         )
 
-    return (
-        flagged.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-        .start()
-    )
+    spark = flagged.sparkSession
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    try:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
+        return (
+            flagged.writeStream.outputMode("append")
+            .queryName(query_name)
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(write_batch)
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)

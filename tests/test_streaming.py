@@ -261,6 +261,8 @@ def test_rcstream_live_mode_construction():
     # live mode constructs (buffer starts empty; the feed thread backs
     # off against the unreachable endpoint)
     r = ChangeStreamReader(CHANGE_SCHEMA, {"url": "https://127.0.0.1:1/sse"})
+    # no feed (no connection) until an offset call needs one
+    assert r._feed is None
     assert r.initialOffset() == {"line": 0}
     assert r.latestOffset() == {"line": 0}
     assert r.partitions({"line": 0}, {"line": 0})[0].rows == []
@@ -503,6 +505,113 @@ def test_checkpoint_restart_is_exactly_once(spark, users, revisions, tmp_path):
     assert len(set(titles)) == 6
 
 
+def _state_partitions(q) -> int:
+    """numShufflePartitions of the query's (single) state operator, read
+    from a micro-batch that processed input."""
+    progs = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert progs, q.recentProgress
+    return progs[-1]["stateOperators"][0]["numShufflePartitions"]
+
+
+@pytest.fixture()
+def pinned_shuffle_partitions(spark):
+    """Pins the session's spark.sql.shuffle.partitions to a value no
+    stream start picks (so a leak from any earlier start shows), and
+    restores the previous value afterwards."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    pinned = str(spark.sparkContext.defaultParallelism + 5)
+    spark.conf.set("spark.sql.shuffle.partitions", pinned)
+    yield pinned
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_flaglog_state_runs_one_partition_per_core(
+    spark, users, revisions, tmp_path, pinned_shuffle_partitions
+):
+    """The flag-log query's dedup state runs one partition per core
+    (one wave of state tasks per micro-batch), while the session keeps
+    its own batch shuffle-partition count."""
+    src = tmp_path / "in"
+    src.mkdir()
+    write_changes_jsonl(
+        str(src / "a.json"), [make_change(i, f"W{i}") for i in range(6)]
+    )
+    before = pinned_shuffle_partitions
+    flagged = build_pipeline(
+        read_change_stream(spark, str(src)), _spec(), users=users, revisions=revisions
+    )
+    q = start_flaglog_sink(flagged, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        q.processAllAvailable()
+        assert _state_partitions(q) == spark.sparkContext.defaultParallelism
+    finally:
+        q.stop()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_flaglog_failed_start_restores_shuffle_partitions(
+    spark, tmp_path, pinned_shuffle_partitions
+):
+    """A start() that raises must not leave the session at the
+    stream's partition count."""
+    src = tmp_path / "in"
+    src.mkdir()
+    before = pinned_shuffle_partitions
+    # an aggregation without a watermark cannot run in append mode:
+    # start() raises at analysis
+    counts = read_change_stream(spark, str(src)).groupBy("title").count()
+    with pytest.raises(Exception, match="(?i)append"):
+        start_flaglog_sink(counts, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_flaglog_restart_keeps_checkpoint_partitions(
+    spark, users, revisions, tmp_path, monkeypatch
+):
+    """A checkpoint first written at another partition count (16, the
+    session default the flag log used to run at) restarts through
+    start_flaglog_sink with that count, and its dedup state still
+    suppresses every title it flagged before the restart."""
+    from pyspark import SparkContext
+
+    src = tmp_path / "in"
+    src.mkdir()
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    cores = spark.sparkContext.defaultParallelism
+    first_parts = 16 if cores != 16 else 32
+
+    def run():
+        stream = read_change_stream(spark, str(src))
+        flagged = build_pipeline(stream, _spec(), users=users, revisions=revisions)
+        q = start_flaglog_sink(flagged, out_dir, ckpt)
+        try:
+            q.processAllAvailable()
+            return _state_partitions(q)
+        finally:
+            q.stop()
+
+    write_changes_jsonl(
+        str(src / "a.json"), [make_change(i, f"R{i}") for i in range(6)]
+    )
+    with monkeypatch.context() as m:
+        # the checkpoint is first started on a host with first_parts cores
+        m.setattr(SparkContext, "defaultParallelism", property(lambda sc: first_parts))
+        assert run() == first_parts
+
+    # after the restart: R0/R2/R4 flagged again (must stay suppressed),
+    # odd ids unflagged, R12/R14 new flags
+    write_changes_jsonl(
+        str(src / "b.json"),
+        [make_change(i, f"R{i - 6}") for i in range(6, 12)]
+        + [make_change(i, f"R{i}") for i in range(12, 16)],
+    )
+    assert run() == first_parts
+    titles = [r["title"] for r in spark.read.json(out_dir).collect()]
+    assert sorted(titles) == ["R0", "R12", "R14", "R2", "R4"]
+
+
 def test_stateful_user_spend_evicts_and_restores(spark, tmp_path):
     """Cumulative per-user spend through the checkpointed state store,
     across BOTH micro-batches and a full query restart: phase 1 drains
@@ -633,9 +742,10 @@ class _LoopbackSSE:
     behavior is observable; on resume it serves only events after the
     presented id."""
 
-    def __init__(self, n_events=10, drop_after=None, ids=True):
+    def __init__(self, n_events=10, drop_after=None, ids=True, delay=0.0):
         import http.server
         import threading
+        import time
 
         srv = self
 
@@ -647,6 +757,7 @@ class _LoopbackSSE:
                 self.send_response(200)
                 self.send_header("Content-Type", "text/event-stream")
                 self.end_headers()
+                time.sleep(srv.delay)
                 stop = srv.n_events if srv.drop_after is None else min(
                     start + srv.drop_after, srv.n_events
                 )
@@ -666,6 +777,7 @@ class _LoopbackSSE:
 
         self.n_events = n_events
         self.drop_after = drop_after
+        self.delay = delay
         self.ids = ids
         self.seen_last_ids = []
         self._httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
@@ -780,7 +892,7 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
     srv = _LoopbackSSE(n_events=6)
     try:
         r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
-        feed = r._feed
+        feed = r._live_feed()
         assert _wait_for(lambda: feed.size() == 6)
         assert r.latestOffset() == {"line": 6}
         parts = r.partitions({"line": 0}, {"line": 6})
@@ -806,6 +918,7 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
     srv2 = _LoopbackSSE(n_events=6)
     try:
         r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
+        r2._live_feed()
         assert _wait_for(lambda: len(srv2.seen_last_ids) > 0)
         assert srv2.seen_last_ids[0] == "3"
         # replayed events must ALIGN to the checkpoint offset, not be
@@ -821,6 +934,32 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
         srv2.close()
 
 
+def test_sse_restart_waits_for_replay_before_aligning(tmp_path):
+    """After a restart Spark's first call re-plans the checkpointed
+    batch, right after the feed connects.  Offsets 4-5 were planned
+    but not yet committed to the source (the idfile says 4): the
+    Last-Event-ID replay must land at 4.. before the feed aligns to
+    the checkpoint (6), or it is cleared and 4-5 come back as 6-7."""
+    from rc_scanner_spark.schemas import CHANGE_SCHEMA as SCHEMA
+    from rc_scanner_spark.sources.sse import ChangeStreamReader
+
+    idfile = str(tmp_path / "last_id")
+    with open(idfile, "w", encoding="utf-8") as f:
+        f.write("3\n4")
+    srv = _LoopbackSSE(n_events=8, delay=0.5)  # replay arrives late
+    try:
+        r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
+        assert r.partitions({"line": 6}, {"line": 6})[0].rows == []
+        assert _wait_for(lambda: r.latestOffset() == {"line": 8}), r.latestOffset()
+        assert srv.seen_last_ids == ["3"]
+        parts = r.partitions({"line": 6}, {"line": 8})
+        title = SCHEMA.fieldNames().index("title")
+        titles = [row[title] for p in parts for row in p.rows]
+        assert titles == ["Live6", "Live7"]
+    finally:
+        srv.close()
+
+
 def test_sse_idless_stream_persists_offset(tmp_path):
     """On a stream whose events carry NO ids, trim() must still
     persist the committed global offset (empty id line + base) so a
@@ -834,7 +973,7 @@ def test_sse_idless_stream_persists_offset(tmp_path):
     srv = _LoopbackSSE(n_events=6, ids=False)
     try:
         r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
-        feed = r._feed
+        feed = r._live_feed()
         # >= not ==: with no Last-Event-ID to present, every ~1 s
         # reconnect replays all 6 events and the buffer keeps growing
         # — an exact-size assert is a <1 s race (review r12).  The
@@ -855,6 +994,7 @@ def test_sse_idless_stream_persists_offset(tmp_path):
     srv2 = _LoopbackSSE(n_events=6, ids=False)
     try:
         r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
+        r2._live_feed()
         assert r2._feed._base == 4 and r2._feed._aligned
         assert not r2._feed._resumed
         assert _wait_for(lambda: len(srv2.seen_last_ids) > 0)
@@ -981,3 +1121,113 @@ def test_sse_loopback_live_structured_streaming(spark, tmp_path):
     assert got2 == [f"Live{i}" for i in range(8)], (
         f"phase2: {got2}, seen={srv2.seen_last_ids}"
     )
+
+
+def test_rcstream_live_query_opens_one_connection(spark, tmp_path):
+    """A live rcstream query opens exactly one SSE connection (Spark
+    also builds a reader in a planning worker, which must not connect)
+    and drops it when the query stops."""
+    import http.server
+    import threading
+    import time
+
+    spark.dataSource.register(RcChangeDataSource)
+    lock = threading.Lock()
+    stats = {"opened": 0, "open": 0}
+    done = threading.Event()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            with lock:
+                stats["opened"] += 1
+                stats["open"] += 1
+            try:
+                self.send_response(200)
+                self.send_header("Content-Type", "text/event-stream")
+                self.end_headers()
+                i = 0
+                # stream until the client goes away: a write to a
+                # closed connection raises
+                while not done.is_set():
+                    ev = json.dumps(make_change(i, f"Conn{i}"))
+                    self.wfile.write(f"id: {i}\ndata: {ev}\n\n".encode())
+                    self.wfile.flush()
+                    i += 1
+                    time.sleep(0.05)
+            except OSError:
+                pass
+            finally:
+                with lock:
+                    stats["open"] -= 1
+
+        def log_message(self, *a):
+            pass
+
+    httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    try:
+        df = (
+            spark.readStream.format("rcstream")
+            .option("url", f"http://127.0.0.1:{httpd.server_address[1]}/sse")
+            .load()
+        )
+        q = df.writeStream.format("memory").queryName("conn_out").start()
+        try:
+            assert _wait_for(
+                lambda: spark.sql("SELECT count(*) FROM conn_out").first()[0] > 0,
+                timeout=120.0,
+            )
+            assert stats["opened"] == 1, stats
+        finally:
+            q.stop()
+        assert _wait_for(lambda: stats["open"] == 0, timeout=10.0), stats
+        assert stats["opened"] == 1, stats
+    finally:
+        done.set()
+        httpd.shutdown()
+
+
+@pytest.mark.parametrize("chunked", [False, True], ids=["http10", "chunked"])
+def test_sse_frame_delivered_before_quiet_spell(chunked):
+    """The last frame before a quiet spell is delivered as soon as its
+    blank line arrives, on both a connection-delimited (HTTP/1.0) and a
+    chunked response: the feed must not wait for later bytes."""
+    import http.server
+    import threading
+
+    from rc_scanner_spark.sources.sse import _LiveFeed
+
+    quiet = threading.Event()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1" if chunked else "HTTP/1.0"
+
+        def do_GET(self):
+            self.send_response(200)
+            self.send_header("Content-Type", "text/event-stream")
+            if chunked:
+                self.send_header("Transfer-Encoding", "chunked")
+            self.end_headers()
+            frame = f"id: 0\ndata: {json.dumps(make_change(0, 'Quiet0'))}\n\n".encode()
+            if chunked:
+                frame = b"%x\r\n%s\r\n" % (len(frame), frame)
+            self.wfile.write(frame)
+            self.wfile.flush()
+            quiet.wait(30.0)  # silent, connection held open
+
+        def log_message(self, *a):
+            pass
+
+    httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    feed = _LiveFeed(f"http://127.0.0.1:{httpd.server_address[1]}/sse", timeout=30.0)
+    try:
+        assert _wait_for(lambda: feed.size() == 1, timeout=2.0), feed.size()
+        assert feed.slice(0, 1)[0]["title"] == "Quiet0"
+        # close() wakes the thread blocked on the quiet connection
+        feed.close()
+        assert not feed._thread.is_alive()
+    finally:
+        feed.close()
+        quiet.set()
+        httpd.shutdown()
