@@ -3,8 +3,7 @@
 the LOG_LEVEL-gated sink set (C4, examples/config.py:1-17).
 
 Batch mode scans a directory of Change JSON-lines; stream mode tails
-it via Structured Streaming (the offline twin of the live SSE source;
-pass --source rcstream --path file.jsonl for the custom source).
+it via Structured Streaming (the offline twin of the live SSE source).
 
 Usage:
     python -m rc_scanner_spark.cli userboxes --input /data/changes \

@@ -149,17 +149,3 @@ def regex_matches(
     and fully codegen-friendly; each regex is evaluated once per row.
     """
     return [(p, text.rlike(p)) for p in (translate_pattern(q) for q in patterns)]
-
-
-def any_match(text: Column, patterns: list[str | re.Pattern[str]]) -> Column:
-    """Boolean: does any pattern match?  Short-circuiting OR of rlike,
-    cheaper than materializing the hits array when only existence is
-    needed (the reference always materializes; we keep both forms).
-    """
-    if not patterns:
-        return F.lit(False)
-    out = None
-    for p in patterns:
-        c = text.rlike(translate_pattern(p))
-        out = c if out is None else (out | c)
-    return out

@@ -176,45 +176,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
 
 
-def _min_hash_fold(seed: int):
-    """Merge function for one MinHash permutation (captures the seed as
-    a Python int so the lambda arity stays (acc, element))."""
-
-    def fold(acc: Column, sh: Column) -> Column:
-        return F.least(
-            F.coalesce(acc, F.lit(9223372036854775807)),
-            F.xxhash64(F.lit(seed), sh),
-        )
-
-    return fold
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: for seed s, min over shingles of
-    xxhash64(s, shingle).  xxhash64 is a JVM built-in; the per-seed min
-    is an ``aggregate`` fold — no shuffle, no UDF."""
-    return F.array(
-        *[
-            F.aggregate(shingles, F.lit(None).cast("long"), _min_hash_fold(seed))
-            for seed in range(num_hashes)
-        ]
-    )
-
-
-def _exploded_shingles(
-    df: DataFrame, id_col: str, text_col: str, shingle_k: int
-) -> DataFrame:
-    """(id, shingle) rows — the codegen-friendly long form.  Array
-    higher-order functions (``aggregate``) are interpreted per element
-    in Spark; explode + hash-aggregate keeps MinHash/Jaccard inside
-    whole-stage codegen, which is 5-20x faster and the only shape that
-    scales: state per task is one hash table, not a wide array per row."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_k)).alias("shingle"),
-    )
-
-
 def minhash_signature_frame(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1198,7 +1159,7 @@ def simhash_pairs_portable(
     # r14 batch 7: the 60 per-bit vote aggregates, the 4 x 15 chunk
     # chains and the explode array are SQL expression strings — the
     # Column-API builds cost ~9.5 s of driver plan construction per
-    # call (tools/build_times.py radar).  Same literals, same
+    # call (`tools/run_query.py --build-only` radar).  Same literals, same
     # left-associated sums, same CASE shapes: parsed trees and every
     # signature bit are unchanged (oracle-replayed).
     votes = toks.groupBy("id").agg(

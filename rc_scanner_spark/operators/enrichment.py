@@ -75,33 +75,3 @@ def lookup_enrich(
             yield pdf.assign(**{out_col: pdf[key_col].map(by_raw)})
 
     return df.mapInPandas(op, schema=schema)
-
-
-def http_json_fetcher(
-    url_template: str, extract: Callable[[Any], Any], timeout: float = 10.0
-) -> Callable[[list[Any]], dict[Any, Any]]:
-    """Production fetcher: pooled-session HTTP GET per distinct key.
-
-    Mirrors the reference's API shape (one GET per key,
-    scanner.py:192,214) but with connection reuse and batch-level key
-    dedup.  Gated behind an import-try: requests may be absent and no
-    network exists in the test environment.
-    """
-    try:
-        import requests
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError("requests not available in this environment") from e
-
-    session = requests.Session()
-
-    def fetch(keys: list[Any]) -> dict[Any, Any]:
-        out: dict[Any, Any] = {}
-        for k in keys:
-            try:
-                resp = session.get(url_template.format(key=k), timeout=timeout)
-                out[k] = extract(resp.json())
-            except Exception:
-                out[k] = None  # C1: per-record containment
-        return out
-
-    return fetch

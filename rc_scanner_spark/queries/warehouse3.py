@@ -272,9 +272,9 @@ def q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # land in that word.  r14 batch 7: the 16-word x 3-hash mask
     # chains are SQL expression strings — the Column-API loop was
     # ~500 py4j calls of driver plan construction per build
-    # (tools/build_times.py radar); literals/casts spelled exactly as
-    # the Column forms parsed, so filter state and row sets are
-    # unchanged.
+    # (`tools/run_query.py --build-only` radar); literals/casts
+    # spelled exactly as the Column forms parsed, so filter state and
+    # row sets are unchanged.
     m = _BLOOM_WORDS * 64
 
     def pos_sql(key: str, i: int) -> str:

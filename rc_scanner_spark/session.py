@@ -18,6 +18,7 @@ cluster-sane default, not a local hack:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -84,13 +85,14 @@ def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session.
 
     Safe to call on the driver-supplied session: every key in
-    RUNTIME_CONF is a runtime conf, not a static one.
+    RUNTIME_CONF is a runtime conf, not a static one.  A key the
+    session refuses keeps its value, with one warning naming it.
     """
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf locked down
-            pass
+        except Exception as e:  # conf locked down: the session keeps its value
+            warnings.warn(f"tune(): could not set {k}: {e}", stacklevel=2)
     # Shuffle partitions sized from the session's actual parallelism
     # (r8: a foreign/driver session otherwise runs every shuffle at
     # the 200 default — 6x task-launch overhead on local[32]).  This
@@ -101,12 +103,13 @@ def tune(spark: SparkSession) -> SparkSession:
     # that set its own value (get_spark's max(16, cores), or a
     # cluster driver's deliberate 2000) keeps it — "override via
     # conf" stays true.
+    key = "spark.sql.shuffle.partitions"
     try:
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+        if spark.conf.get(key, "200") == "200":
             par = spark.sparkContext.defaultParallelism
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(16, par)))
-    except Exception:  # pragma: no cover - conf locked down
-        pass
+            spark.conf.set(key, str(max(16, par)))
+    except Exception as e:  # conf locked down: the session keeps its value
+        warnings.warn(f"tune(): could not set {key}: {e}", stacklevel=2)
     return spark
 
 

@@ -261,11 +261,14 @@ def test_rcstream_live_mode_construction():
     # live mode constructs (buffer starts empty; the feed thread backs
     # off against the unreachable endpoint)
     r = ChangeStreamReader(CHANGE_SCHEMA, {"url": "https://127.0.0.1:1/sse"})
-    # no feed (no connection) until an offset call needs one
-    assert r._feed is None
-    assert r.initialOffset() == {"line": 0}
-    assert r.latestOffset() == {"line": 0}
-    assert r.partitions({"line": 0}, {"line": 0})[0].rows == []
+    try:
+        # no feed (no connection) until an offset call needs one
+        assert r._feed is None
+        assert r.initialOffset() == {"line": 0}
+        assert r.latestOffset() == {"line": 0}
+        assert r.partitions({"line": 0}, {"line": 0})[0].rows == []
+    finally:
+        r.stop()
     with pytest.raises(ValueError):
         ChangeStreamReader(CHANGE_SCHEMA, {})
 
@@ -810,8 +813,8 @@ def test_sse_loopback_reconnect_and_resume(tmp_path):
     from rc_scanner_spark.sources.sse import _LiveFeed
 
     srv = _LoopbackSSE(n_events=9, drop_after=3)
+    feed = _LiveFeed(srv.url(), timeout=5.0)
     try:
-        feed = _LiveFeed(srv.url(), timeout=5.0)
         assert _wait_for(lambda: feed.size() == 9), feed.size()
         ids = [r["id"] for r in feed.slice(0, 9)]
         assert ids == list(range(9))
@@ -819,6 +822,7 @@ def test_sse_loopback_reconnect_and_resume(tmp_path):
         assert srv.seen_last_ids[0] is None
         assert "2" in srv.seen_last_ids and "5" in srv.seen_last_ids
     finally:
+        feed.close()
         srv.close()
 
 
@@ -863,8 +867,8 @@ def test_sse_double_replay_is_deduped(tmp_path):
 
     httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    feed = _LiveFeed(f"http://127.0.0.1:{httpd.server_address[1]}/sse", timeout=5.0)
     try:
-        feed = _LiveFeed(f"http://127.0.0.1:{httpd.server_address[1]}/sse", timeout=5.0)
         assert _wait_for(lambda: feed.size() >= n_events), (
             f"size={feed.size()}, seen={seen_last_ids}"
         )
@@ -878,6 +882,7 @@ def test_sse_double_replay_is_deduped(tmp_path):
         # the server really did replay an overlap (test is armed)
         assert any(last is not None for last in seen_last_ids)
     finally:
+        feed.close()
         httpd.shutdown()
 
 
@@ -890,8 +895,8 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
 
     idfile = str(tmp_path / "last_id")
     srv = _LoopbackSSE(n_events=6)
+    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
     try:
-        r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
         feed = r._live_feed()
         assert _wait_for(lambda: feed.size() == 6)
         assert r.latestOffset() == {"line": 6}
@@ -911,13 +916,14 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
             # alignment.
             assert f.read() == "3\n4"
     finally:
+        r.stop()
         srv.close()
 
     # restart: fresh server, fresh reader -> resumes from the last
     # COMMITTED id, so the server replays the uncommitted tail (4, 5)
     srv2 = _LoopbackSSE(n_events=6)
+    r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
     try:
-        r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
         r2._live_feed()
         assert _wait_for(lambda: len(srv2.seen_last_ids) > 0)
         assert srv2.seen_last_ids[0] == "3"
@@ -931,6 +937,7 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
         replay = r2._feed.slice(4, 6)
         assert len(replay) >= 1  # the recovered uncommitted events
     finally:
+        r2.stop()
         srv2.close()
 
 
@@ -947,8 +954,8 @@ def test_sse_restart_waits_for_replay_before_aligning(tmp_path):
     with open(idfile, "w", encoding="utf-8") as f:
         f.write("3\n4")
     srv = _LoopbackSSE(n_events=8, delay=0.5)  # replay arrives late
+    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
     try:
-        r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
         assert r.partitions({"line": 6}, {"line": 6})[0].rows == []
         assert _wait_for(lambda: r.latestOffset() == {"line": 8}), r.latestOffset()
         assert srv.seen_last_ids == ["3"]
@@ -957,6 +964,7 @@ def test_sse_restart_waits_for_replay_before_aligning(tmp_path):
         titles = [row[title] for p in parts for row in p.rows]
         assert titles == ["Live6", "Live7"]
     finally:
+        r.stop()
         srv.close()
 
 
@@ -971,8 +979,8 @@ def test_sse_idless_stream_persists_offset(tmp_path):
 
     idfile = str(tmp_path / "last_id")
     srv = _LoopbackSSE(n_events=6, ids=False)
+    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
     try:
-        r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
         feed = r._live_feed()
         # >= not ==: with no Last-Event-ID to present, every ~1 s
         # reconnect replays all 6 events and the buffer keeps growing
@@ -986,14 +994,15 @@ def test_sse_idless_stream_persists_offset(tmp_path):
             # committed global offset is still written
             assert f.read() == "\n4"
     finally:
+        r.stop()
         srv.close()
 
     # restart: _base restored from the offset line, no Last-Event-ID
     # presented (nothing to replay on an id-less stream), and
     # latestOffset never regresses below the checkpointed 4
     srv2 = _LoopbackSSE(n_events=6, ids=False)
+    r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
     try:
-        r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
         r2._live_feed()
         assert r2._feed._base == 4 and r2._feed._aligned
         assert not r2._feed._resumed
@@ -1001,6 +1010,7 @@ def test_sse_idless_stream_persists_offset(tmp_path):
         assert srv2.seen_last_ids[0] is None
         assert r2.latestOffset()["line"] >= 4
     finally:
+        r2.stop()
         srv2.close()
 
 
@@ -1019,23 +1029,26 @@ def test_sse_trim_keeps_last_known_id_for_idless_tail(tmp_path):
         f.write("ev-41\n4")  # prior run: committed id ev-41 at offset 4
 
     feed = _LiveFeed("http://127.0.0.1:9/dead", timeout=0.2, idfile=idfile)
-    assert feed._base == 4 and feed._last_committed_id == "ev-41"
-    with feed._lock:
-        # two id-less events arriving before any id-carrying one on
-        # this connection; _last_recv_id was restored, but simulate a
-        # buffer whose stored per-event ids are None (id-less head)
-        feed._events.append(({"title": "A"}, None))
-        feed._events.append(({"title": "B"}, None))
-    feed.trim(6)  # commit both id-less events
-    with open(idfile, encoding="utf-8") as f:
-        # offset advances, the good id survives
-        assert f.read() == "ev-41\n6"
+    try:
+        assert feed._base == 4 and feed._last_committed_id == "ev-41"
+        with feed._lock:
+            # two id-less events arriving before any id-carrying one on
+            # this connection; _last_recv_id was restored, but simulate a
+            # buffer whose stored per-event ids are None (id-less head)
+            feed._events.append(({"title": "A"}, None))
+            feed._events.append(({"title": "B"}, None))
+        feed.trim(6)  # commit both id-less events
+        with open(idfile, encoding="utf-8") as f:
+            # offset advances, the good id survives
+            assert f.read() == "ev-41\n6"
 
-    with feed._lock:
-        feed._events.append(({"title": "C"}, "ev-77"))
-    feed.trim(7)  # an id-carrying commit updates the persisted id
-    with open(idfile, encoding="utf-8") as f:
-        assert f.read() == "ev-77\n7"
+        with feed._lock:
+            feed._events.append(({"title": "C"}, "ev-77"))
+        feed.trim(7)  # an id-carrying commit updates the persisted id
+        with open(idfile, encoding="utf-8") as f:
+            assert f.read() == "ev-77\n7"
+    finally:
+        feed.close()
 
 
 def test_sse_loopback_live_structured_streaming(spark, tmp_path):

@@ -4,7 +4,8 @@ Replicates the test tables N times with disjoint key ranges and a
 per-copy perturbation (documents gain a copy-suffix token, so
 cross-copy documents become near-dups — the dup structure gets RICHER,
 not just bigger; fact keys shift consistently so referential integrity
-holds), then measures warm wall time of the named queries at 1x and Nx.
+holds), then times the named queries at 1x and Nx with run_query.py's
+timing loop (bench.py's warm-up, two passes, min kept).
 
 The point: local[32] cannot run 100 TB, but it CAN answer "is growth
 sub-quadratic?" — a query whose time grows ~Nx with Nx data survives a
@@ -12,15 +13,19 @@ scale-up; one that grows ~N^2 does not.  Results are recorded in
 PLANS.md's growth tables.
 
 Usage:
-    python tools/scale_probe.py [sf_dir] [factor] name...
+    python tools/scale_probe.py NAME... [--sf DIR] [--factor N]
+
+The replicated tables are written to a temporary directory and removed
+at exit.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -65,58 +70,45 @@ def build_replicated(spark, sf_dir: str, out_dir: str, factor: int, tables):
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    if args and ("/" in args[0] or os.sep in args[0]) and not os.path.isdir(args[0]):
-        print(f"sf_dir does not exist: {args[0]}", file=sys.stderr)
-        return 2
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
-    rest = args[1:] if args and os.path.isdir(args[0]) else args
-    factor = int(rest[0]) if rest and rest[0].isdigit() else 4
-    names = rest[1:] if rest and rest[0].isdigit() else rest
-    if not names:
-        print("no query names given", file=sys.stderr)
-        return 2
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("names", nargs="+", help="registry query names")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1", help="table dir")
+    ap.add_argument("--factor", type=int, default=4, help="copies of each table")
+    args = ap.parse_args()
+    if not os.path.isdir(args.sf):
+        ap.error(f"sf_dir does not exist: {args.sf}")
 
-    from rc_scanner_spark.operators.dedup import release_caches
+    from run_query import time_queries, warm_up
+
     from rc_scanner_spark.queries import build_registry
     from rc_scanner_spark.session import get_spark
 
     spark = get_spark("scale-probe")
     registry = build_registry()
+    warm_up(spark, registry, args.sf)
 
-    out_dir = f"/tmp/scale_probe_{factor}x"
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    # replicate every table the probe queries touch (superset is fine)
-    build_replicated(
-        spark, sf_dir, out_dir, factor,
-        ["documents", "events", "orders", "lineitem", "part", "customer",
-         "supplier", "embeddings"],
-    )
-    # tables the queries may load untouched (dims without key shifts)
-    for t in ("region", "nation"):
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(src):
-            dst = os.path.join(out_dir, f"{t}.parquet")
-            (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(src, dst)
+    def best(name: str, sf_dir: str) -> float:
+        [(_, ts, err)] = time_queries(spark, registry, [name], sf_dir, reps=2)
+        if err is not None:
+            raise err
+        return min(ts)
 
-    def run(name: str, d: str) -> float:
-        spark.catalog.clearCache()
-        release_caches()
-        fn = registry[name].fn
-        fn(spark, d).write.format("noop").mode("overwrite").save()  # warm
-        spark.catalog.clearCache()
-        release_caches()
-        t0 = time.perf_counter()
-        fn(spark, d).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    with tempfile.TemporaryDirectory(prefix=f"scale_probe_{args.factor}x-") as out_dir:
+        # replicate every table the probe queries touch (superset is fine)
+        build_replicated(spark, args.sf, out_dir, args.factor, list(_SHIFT))
+        # tables the queries may load untouched (dims without key shifts)
+        for t in ("region", "nation"):
+            src = os.path.join(args.sf, f"{t}.parquet")
+            if os.path.exists(src):
+                dst = os.path.join(out_dir, f"{t}.parquet")
+                (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(src, dst)
 
-    print(f"| query | 1x | {factor}x | ratio |")
-    print("|---|---|---|---|")
-    for name in names:
-        t1 = run(name, sf_dir)
-        tn = run(name, out_dir)
-        print(f"| {name} | {t1:.1f} s | {tn:.1f} s | {tn / t1:.1f}x |")
+        print(f"| query | 1x | {args.factor}x | ratio |")
+        print("|---|---|---|---|")
+        for name in args.names:
+            t1 = best(name, args.sf)
+            tn = best(name, out_dir)
+            print(f"| {name} | {t1:.1f} s | {tn:.1f} s | {tn / t1:.1f}x |", flush=True)
     return 0
 
 
