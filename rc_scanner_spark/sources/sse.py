@@ -9,28 +9,39 @@ Structured Streaming checkpoints give restart recovery.
 
 Two modes:
 
-- ``path`` option set -> **replay mode**: reads a JSON-lines file of
-  Change events; the offset is the line number.  Fully offline,
-  CI-safe, used by the tests.
-- ``url`` option set -> **live mode**: on the query's first offset
-  call, opens one connection to an SSE endpoint (text/event-stream)
-  with a pooled ``requests`` session and buffers events driver-side;
-  the query's ``stop()`` closes it.  Offsets are global event positions; ``commit``
-  trims the committed prefix (the buffer is bounded by the
-  uncommitted window) and, with the ``idfile`` option, persists the
-  SSE event id for restart re-subscription.  Delivery: exactly-once
-  within a driver lifetime (checkpointed offsets), at-least-once
-  across driver restarts (Last-Event-ID re-subscription — the buffer
-  dies with the process, the id file does not).  Exercised offline
-  against a loopback SSE server in tests/test_streaming.py.
+- ``path`` option set -> **replay mode** (``ChangeStreamReader``):
+  reads a JSON-lines file of Change events; the offset is the line
+  number, and each micro-batch is split into partitions of
+  ``batchlines`` lines (default 100) that executor Python workers
+  read.  Fully offline, CI-safe, used by the tests.
+- ``url`` option set -> **live mode** (``LiveChangeReader``): on the
+  query's first offset call, opens one connection to an SSE endpoint
+  (text/event-stream) with a pooled ``requests`` session and buffers
+  events in the driver's source process; the query's ``stop()``
+  closes it.  Offsets are global event positions.  The served range
+  is trimmed from the buffer, and with the ``idfile`` option its last
+  SSE event id and end offset are persisted, on the first offset call
+  after Spark commits the batch.  Delivery: exactly-once within a
+  driver lifetime (checkpointed offsets), at-least-once across driver
+  restarts (Last-Event-ID re-subscription — the buffer dies with the
+  process, the id file does not).  Exercised offline against a
+  loopback SSE server in tests/test_streaming.py.
 
-Partitioning: one partition per stream topic (the reference
-multiplexes topics into one iterator; we keep them parallel).
+Live data path: the events already sit in the driver, so no executor
+Python worker touches them.  Spark's streaming source runner (the
+Python process the driver JVM starts for the source) plans each
+micro-batch as one partition, asks the reader for the range's rows
+(``getCache``), converts them to Arrow and sends them to the JVM,
+which stores them in the block manager; executors read them from
+there.  Replays of a checkpointed batch after a restart take the same
+path.
 """
 
 from __future__ import annotations
 
 import json
+import logging
+import os
 import re
 import threading
 from collections.abc import Iterable, Iterator
@@ -40,9 +51,15 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.datasource_internal import (
+    SimpleInputPartition,
+    _SimpleStreamReaderWrapper,
+)
 from pyspark.sql.types import StructType
 
 from ..schemas import CHANGE_SCHEMA
+
+log = logging.getLogger(__name__)
 
 
 def parse_sse_events(lines: Iterable[str]) -> Iterator[dict]:
@@ -176,6 +193,10 @@ class _LiveFeed:
                     self._aligned = True
             except (OSError, ValueError):
                 pass
+        # source counters: connections after the first, and replayed
+        # events dropped because their id was already received
+        self.reconnects = 0
+        self.replay_drops = 0
         self._resp = None  # the open response, for close() to shut down
         self._closed = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -207,6 +228,7 @@ class _LiveFeed:
                                     # replayed duplicate: advance the
                                     # reconnect cursor, never re-deliver
                                     self._last_recv_id = eid
+                                    self.replay_drops += 1
                                     continue
                                 self._seen_ids[eid] = None
                                 while len(self._seen_ids) > 65536:
@@ -214,8 +236,16 @@ class _LiveFeed:
                             self._last_recv_id = eid or self._last_recv_id
                             self._events.append((obj, self._last_recv_id))
                             self._grew.notify_all()
-            except Exception:
-                pass  # reconnect (C2 without the interactive prompt)
+                reason = f"server ended the stream (HTTP {resp.status_code})"
+            except Exception as e:  # any failure: reconnect (C2 without the prompt)
+                reason = f"{type(e).__name__}: {e}"
+            if self._closed.is_set():
+                break
+            self.reconnects += 1
+            log.warning(
+                "SSE feed %s: %s; reconnecting in 1 s (reconnect %d, Last-Event-ID %s)",
+                self._url, reason, self.reconnects, self._last_recv_id,
+            )
             # backoff so a dead endpoint can't spin-loop; close() cuts it short
             self._closed.wait(1.0)
         self._session.close()
@@ -321,8 +351,6 @@ class _LiveFeed:
             try:
                 with open(tmp, "w", encoding="utf-8") as f:
                     f.write(f"{last_id or ''}\n{base}")
-                import os
-
                 os.replace(tmp, self._idfile)
             except OSError:
                 pass  # persistence is best-effort; worst case re-reads more
@@ -335,47 +363,15 @@ class _LinePartition(InputPartition):
         self.end = end
 
 
-class _LivePartition(InputPartition):
-    def __init__(self, rows: list[tuple]):
-        self.rows = rows
-
-
 class ChangeStreamReader(DataSourceStreamReader):
-    """Stream reader: JSONL replay (offset = line count) or live SSE
-    (offset = buffer index)."""
+    """Replay-mode stream reader: a JSON-lines file of Change events,
+    offset = line count, one partition per ``batchlines`` lines."""
 
     def __init__(self, schema: StructType, options: dict):
         self.path = options.get("path")
-        self.url = options.get("url")
         self.batch_lines = int(options.get("batchlines", "100"))
-        self._idfile = options.get("idfile")
-        self._feed: _LiveFeed | None = None
-        if not self.path and not self.url:
+        if not self.path:
             raise ValueError("rcstream source needs a 'path' (replay) or 'url' (live)")
-        if self.url and not self.path:
-            try:
-                import requests  # noqa: F401
-            except ImportError as e:  # pragma: no cover
-                raise NotImplementedError(
-                    "live SSE mode requires the requests package"
-                ) from e
-
-    def _live_feed(self) -> _LiveFeed | None:
-        """The live feed (None in replay mode), connected on first use.
-
-        Only the offset calls (``latestOffset``, ``partitions``,
-        ``commit``) reach it, and Spark makes those on one reader per
-        query.  Spark also builds a reader in a pooled planning worker
-        just to pickle ``read``; a feed opened there would hold a
-        second SSE connection whose thread buffers every event,
-        untrimmed, for the worker's lifetime."""
-        if self._feed is None and self.url and not self.path:
-            self._feed = _LiveFeed(self.url, idfile=self._idfile)
-            # Spark plans a range right after this first call: give the
-            # new connection a moment to deliver, or a new query's
-            # first (cold, slowest) micro-batch is always an empty one.
-            self._feed.wait_for(self._feed.size() + 1, timeout=2.0)
-        return self._feed
 
     def _count_lines(self) -> int:
         try:
@@ -388,41 +384,15 @@ class ChangeStreamReader(DataSourceStreamReader):
         return {"line": 0}
 
     def latestOffset(self) -> dict:
-        feed = self._live_feed()
-        if feed is not None:
-            return {"line": feed.size()}
         return {"line": self._count_lines()}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         lo, hi = start["line"], end["line"]
         step = max(self.batch_lines, 1)
-        feed = self._live_feed()
-        if feed is not None:
-            # Spark asks for a range past the buffer only right after a
-            # restart: the range comes from the checkpoint and the
-            # Last-Event-ID replay may still be in flight.  Aligning
-            # before it lands would clear the buffer and deliver the
-            # replayed events a second time.  Bounded: a server that
-            # cannot replay never fills the gap, and fast_forward then
-            # skips it (the documented loss window).
-            feed.wait_for(hi, timeout=10.0)
-            feed.fast_forward(lo)
-            # Live events exist only in the driver buffer: ship the
-            # already-coerced rows inside the serialized partitions.
-            parts: list[InputPartition] = [
-                _LivePartition([_row(obj) for obj in feed.slice(s, min(s + step, hi))])
-                for s in range(lo, hi, step)
-            ]
-            return parts or [_LivePartition([])]
-        parts = []
-        for s in range(lo, hi, step):
-            parts.append(_LinePartition(self.path, s, min(s + step, hi)))
+        parts = [_LinePartition(self.path, s, min(s + step, hi)) for s in range(lo, hi, step)]
         return parts or [_LinePartition(self.path, lo, lo)]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        if isinstance(partition, _LivePartition):
-            yield from partition.rows
-            return
+    def read(self, partition: _LinePartition) -> Iterator[tuple]:
         with open(partition.path, "r", encoding="utf-8") as f:
             for i, line in enumerate(f):
                 if i < partition.start:
@@ -431,12 +401,91 @@ class ChangeStreamReader(DataSourceStreamReader):
                     break
                 yield _row(json.loads(line))
 
-    def commit(self, end: dict) -> None:
+
+class LiveChangeReader(_SimpleStreamReaderWrapper):
+    """Live-mode stream reader: offsets are global positions in the
+    SSE feed's driver-side buffer.
+
+    It plugs into the prefetch protocol of PySpark's private
+    ``_SimpleStreamReaderWrapper``: the streaming source runner sends
+    ``getCache``'s rows to the JVM as Arrow with the partition, so no
+    executor ever calls ``read``.  The public
+    ``SimpleDataSourceStreamReader`` would reach the same protocol, but
+    its wrapper never forwards ``stop()`` (the SSE connection would
+    leak), and it serves restart replays through ``readBetweenOffsets``
+    in an executor worker, which has no feed and would open a second
+    connection."""
+
+    def __init__(self, url: str, idfile: str | None = None):
+        self.url = url
+        self._idfile = idfile
+        self._feed: _LiveFeed | None = None
+        self._served: int | None = None  # end of a served range not yet persisted
+
+    def _live_feed(self) -> _LiveFeed:
+        """The feed, connected on first use.
+
+        Only the offset calls reach it, and Spark makes those on one
+        reader per query, in its streaming source runner.  Spark also
+        builds a reader in a pooled planning worker just to pickle
+        ``read``; a feed opened there would hold a second SSE
+        connection whose thread buffers every event, untrimmed, for
+        the worker's lifetime."""
+        if self._feed is None:
+            self._feed = _LiveFeed(self.url, idfile=self._idfile)
+            # Spark plans a range right after this first call: give the
+            # new connection a moment to deliver, or a new query's
+            # first (cold, slowest) micro-batch is always an empty one.
+            self._feed.wait_for(self._feed.size() + 1, timeout=2.0)
+        return self._feed
+
+    def initialOffset(self) -> dict:
+        return {"line": 0}
+
+    def latestOffset(self) -> dict:
         feed = self._live_feed()
-        if feed is not None:
-            # Bound the driver buffer to the uncommitted window and
-            # persist the resumption id (see _LiveFeed.trim).
-            feed.trim(end["line"])
+        if self._served is not None:
+            # Spark asks for the next offset only after it has written
+            # the served batch to its commit log, while commit() for that
+            # batch comes only once the next batch is planned, so after a
+            # clean stop it never comes.  Trim and persist the range now.
+            feed.trim(self._served)
+            self._served = None
+        return {"line": feed.size()}
+
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        return [SimpleInputPartition(start, end)]
+
+    def getCache(self, start: dict, end: dict) -> Iterator[tuple]:
+        """The rows of ``[start, end)``, for the source runner to send to
+        the JVM with the partition."""
+        lo, hi = start["line"], end["line"]
+        feed = self._live_feed()
+        # Spark asks for a range past the buffer only right after a
+        # restart: the range comes from the checkpoint and the
+        # Last-Event-ID replay may still be in flight.  Aligning
+        # before it lands would clear the buffer and deliver the
+        # replayed events a second time.  Bounded: a server that
+        # cannot replay never fills the gap, and fast_forward then
+        # skips it (the documented loss window).
+        feed.wait_for(hi, timeout=10.0)
+        feed.fast_forward(lo)
+        rows = [_row(obj) for obj in feed.slice(lo, hi)]
+        self._served = hi
+        return iter(rows)
+
+    def read(self, partition: InputPartition) -> Iterator[tuple]:
+        raise RuntimeError(
+            "rcstream live rows reach executors from the driver through the "
+            "block manager; an executor-side read means Spark did not prefetch "
+            f"the range {partition.start} .. {partition.end}"
+        )
+
+    def commit(self, end: dict) -> None:
+        # Bound the driver buffer to the uncommitted window and persist
+        # the resumption id (see _LiveFeed.trim); usually latestOffset
+        # has already done so.
+        self._live_feed().trim(end["line"])
 
     def stop(self) -> None:
         # Spark calls this when the query stops: drop the SSE
@@ -474,5 +523,8 @@ class RcChangeDataSource(DataSource):
     def schema(self) -> StructType:
         return CHANGE_SCHEMA
 
-    def streamReader(self, schema: StructType) -> ChangeStreamReader:
+    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
+        url = self.options.get("url")
+        if url and not self.options.get("path"):
+            return LiveChangeReader(url, self.options.get("idfile"))
         return ChangeStreamReader(schema, self.options)

@@ -6,12 +6,16 @@ Streaming query: file-replay (CI-safe) or the custom SSE source feeds
 predicates; dedup is ``dropDuplicates`` backed by the state store
 (unbounded, matching the reference's never-expiring flag-log dedup,
 filter_.py:90-102 — add a watermark to bound state when the product
-semantics allow); sinks attach per LOG_LEVEL via ``foreachBatch``.
+semantics allow); the flag log is Spark's built-in JSON file sink.
 
 Delivery: the reference is at-most-once with no offset tracking
 (SSE offsets present but unused, utils.py:10).  Checkpointing upgrades
 this to exactly-once-per-sink with restart recovery — the C2 restart
-prompt (scanner.py:82-88) disappears.
+prompt (scanner.py:82-88) disappears.  The file sink records each
+micro-batch's files in its ``_spark_metadata`` log when the batch
+commits, and Spark reads of the output directory list only the files
+in that log, so a batch retried after its files landed is not seen
+twice.
 """
 
 from __future__ import annotations
@@ -244,18 +248,23 @@ def dedup_within_watermark(
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
+FLAGLOG_COLUMNS = ("filter", "title", "user", "date", "filename", "match_message")
+
+
 def start_flaglog_sink(
     flagged: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     query_name: str = "flaglog",
 ) -> StreamingQuery:
-    """K3 streaming sink: exactly-once JSON-lines via foreachBatch +
-    checkpointing.  Each micro-batch OVERWRITES its own epoch=N
-    partition directory (the idempotent-foreachBatch recipe, same as
-    the corpus builder) — a plain append would double-write a batch
-    that is retried after the files land but before the checkpoint
-    commits.
+    """K3 streaming sink: the ``FLAGLOG_COLUMNS`` of each micro-batch,
+    appended as JSON-lines part files under ``out_dir`` by Spark's
+    built-in file sink.  Exactly-once: the sink lists each batch's
+    files in ``out_dir/_spark_metadata`` when the batch commits, skips
+    a retried batch that is already listed, and ``spark.read`` of
+    ``out_dir`` sees only the files in that log (a part file left by a
+    failed attempt is ignored).  Once the log exists, files written to
+    ``out_dir`` by anything else are not seen either.
 
     The query starts with ``spark.sql.shuffle.partitions`` set to the
     session's ``defaultParallelism``, so the dedup state runs one wave
@@ -270,16 +279,6 @@ def start_flaglog_sink(
     once per checkpoint, from the cores available when that
     checkpoint was first started (a checkpoint written at 16 keeps
     16).  To change it, start from a new checkpoint."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(
-                "filter", "title", "user", "date", "filename", "match_message"
-            )
-            .write.mode("overwrite")
-            .json(f"{out_dir}/epoch={epoch_id}")
-        )
-
     spark = flagged.sparkSession
     old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     try:
@@ -288,10 +287,12 @@ def start_flaglog_sink(
             str(spark.sparkContext.defaultParallelism),
         )
         return (
-            flagged.writeStream.outputMode("append")
+            flagged.select(*FLAGLOG_COLUMNS)
+            .writeStream.format("json")
+            .outputMode("append")
             .queryName(query_name)
+            .option("path", out_dir)
             .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(write_batch)
             .start()
         )
     finally:

@@ -1,6 +1,6 @@
 """Streaming-path tests: file replay through the scanner pipeline,
 the custom rcstream DataSource (offset tracking), watermarked windows,
-stateful dedup across micro-batches, foreachBatch flaglog sink.
+stateful dedup across micro-batches, the flag log's JSON file sink.
 All offline (file sources + memory sinks)."""
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from rc_scanner_spark.filters import FilterSpec
 from rc_scanner_spark.schemas import CHANGE_SCHEMA
 from rc_scanner_spark.sources.sse import RcChangeDataSource
 from rc_scanner_spark.streaming.pipeline import (
+    FLAGLOG_COLUMNS,
     build_pipeline,
     read_change_stream,
     start_flaglog_sink,
@@ -255,22 +256,65 @@ def test_flaglog_sink_exactly_once_shape(spark, users, revisions, tmp_path):
     )
 
 
+def test_flaglog_reads_skip_uncommitted_part_files(spark, users, revisions, tmp_path):
+    """A part file the sink's _spark_metadata log does not list (left by
+    a failed attempt) is invisible to spark.read.json and to the array
+    export: both return exactly the committed rows."""
+    from rc_scanner_spark.sinks.flaglog import export_array
+
+    src = tmp_path / "in"
+    src.mkdir()
+    write_changes_jsonl(str(src / "a.json"), [make_change(i, f"O{i}") for i in range(6)])
+    out_dir = tmp_path / "flaglog"
+    flagged = build_pipeline(
+        read_change_stream(spark, str(src)), _spec(), users=users, revisions=revisions
+    )
+    q = start_flaglog_sink(flagged, str(out_dir), str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+    assert (out_dir / "_spark_metadata").is_dir()
+    orphan = dict.fromkeys(FLAGLOG_COLUMNS, "orphan")
+    (out_dir / "part-99999-orphan.json").write_text(json.dumps(orphan) + "\n")
+
+    assert sorted(r.title for r in spark.read.json(str(out_dir)).collect()) == [
+        "O0",
+        "O2",
+        "O4",
+    ]
+    exported = tmp_path / "flagged_changes.json"
+    export_array(str(out_dir), str(exported), spark)
+    rows = json.loads(exported.read_text())
+    assert sorted(r["title"] for r in rows) == ["O0", "O2", "O4"]
+    assert all(set(r) == set(FLAGLOG_COLUMNS) for r in rows)
+
+
 def test_rcstream_live_mode_construction():
-    from rc_scanner_spark.sources.sse import ChangeStreamReader
+    from pyspark.sql.datasource_internal import SimpleInputPartition
+
+    from rc_scanner_spark.sources.sse import ChangeStreamReader, LiveChangeReader
 
     # live mode constructs (buffer starts empty; the feed thread backs
     # off against the unreachable endpoint)
-    r = ChangeStreamReader(CHANGE_SCHEMA, {"url": "https://127.0.0.1:1/sse"})
+    src = RcChangeDataSource({"url": "https://127.0.0.1:1/sse"})
+    r = src.streamReader(CHANGE_SCHEMA)
     try:
+        assert isinstance(r, LiveChangeReader)
         # no feed (no connection) until an offset call needs one
         assert r._feed is None
         assert r.initialOffset() == {"line": 0}
         assert r.latestOffset() == {"line": 0}
-        assert r.partitions({"line": 0}, {"line": 0})[0].rows == []
+        (part,) = r.partitions({"line": 0}, {"line": 0})
+        assert isinstance(part, SimpleInputPartition)
+        assert list(r.getCache({"line": 0}, {"line": 0})) == []
+        # live rows never reach an executor-side read
+        with pytest.raises(RuntimeError, match="block manager"):
+            list(r.read(part))
     finally:
         r.stop()
     with pytest.raises(ValueError):
         ChangeStreamReader(CHANGE_SCHEMA, {})
+    with pytest.raises(ValueError):
+        RcChangeDataSource({}).streamReader(CHANGE_SCHEMA)
 
 
 def test_sse_frame_parser():
@@ -562,8 +606,12 @@ def test_flaglog_failed_start_restores_shuffle_partitions(
     src.mkdir()
     before = pinned_shuffle_partitions
     # an aggregation without a watermark cannot run in append mode:
-    # start() raises at analysis
-    counts = read_change_stream(spark, str(src)).groupBy("title").count()
+    # start() raises at analysis.  It is grouped by the six flag-log
+    # columns, so the sink's column select succeeds and start() fails.
+    stream = read_change_stream(spark, str(src))
+    for c in ("filter", "date", "filename", "match_message"):
+        stream = stream.withColumn(c, F.lit("x"))
+    counts = stream.groupBy(*FLAGLOG_COLUMNS).count()
     with pytest.raises(Exception, match="(?i)append"):
         start_flaglog_sink(counts, str(tmp_path / "out"), str(tmp_path / "ckpt"))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
@@ -743,9 +791,10 @@ class _LoopbackSSE:
     text/event-stream frames with ids, then drops the connection.
     Records the Last-Event-ID header of every request so resumption
     behavior is observable; on resume it serves only events after the
-    presented id."""
+    presented id.  Without one it starts at event ``now``: a server
+    that serves only what is new, as EventStreams does."""
 
-    def __init__(self, n_events=10, drop_after=None, ids=True, delay=0.0):
+    def __init__(self, n_events=10, drop_after=None, ids=True, delay=0.0, now=0):
         import http.server
         import threading
         import time
@@ -756,7 +805,7 @@ class _LoopbackSSE:
             def do_GET(self):
                 last = self.headers.get("Last-Event-ID")
                 srv.seen_last_ids.append(last)
-                start = int(last) + 1 if last is not None else 0
+                start = int(last) + 1 if last is not None else srv.now
                 self.send_response(200)
                 self.send_header("Content-Type", "text/event-stream")
                 self.end_headers()
@@ -781,6 +830,7 @@ class _LoopbackSSE:
         self.n_events = n_events
         self.drop_after = drop_after
         self.delay = delay
+        self.now = now
         self.ids = ids
         self.seen_last_ids = []
         self._httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
@@ -823,6 +873,50 @@ def test_sse_loopback_reconnect_and_resume(tmp_path):
         assert "2" in srv.seen_last_ids and "5" in srv.seen_last_ids
     finally:
         feed.close()
+        srv.close()
+
+
+def test_sse_feed_counts_and_logs_reconnects(caplog):
+    """Nothing fails silently: every reconnect is counted on the feed
+    and logged once at WARNING with the reason the connection ended."""
+    import logging
+
+    from rc_scanner_spark.sources.sse import _LiveFeed
+
+    srv = _LoopbackSSE(n_events=6, drop_after=2)
+    with caplog.at_level(logging.WARNING, logger="rc_scanner_spark.sources.sse"):
+        feed = _LiveFeed(srv.url(), timeout=5.0)
+        try:
+            assert _wait_for(lambda: feed.size() == 6), feed.size()
+            # connections ended after events 1 and 3 (then 5, ...)
+            assert _wait_for(lambda: feed.reconnects >= 2)
+        finally:
+            feed.close()
+            srv.close()
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == feed.reconnects
+    assert all("server ended the stream (HTTP 200)" in r.getMessage() for r in warnings)
+    assert "Last-Event-ID 1" in warnings[0].getMessage()
+    # the server honours Last-Event-ID: nothing was replayed twice
+    assert feed.replay_drops == 0
+
+
+def test_sse_live_reader_stop_closes_feed():
+    """The live reader's stop() (which Spark calls when the query
+    stops) closes the feed's connection and ends its thread."""
+    from rc_scanner_spark.sources.sse import LiveChangeReader
+
+    srv = _LoopbackSSE(n_events=3)
+    r = LiveChangeReader(srv.url())
+    try:
+        r.latestOffset()
+        feed = r._feed
+        assert feed is not None and feed._thread.is_alive()
+        r.stop()
+        assert feed._closed.is_set()
+        assert not feed._thread.is_alive()
+    finally:
+        r.stop()
         srv.close()
 
 
@@ -879,8 +973,10 @@ def test_sse_double_replay_is_deduped(tmp_path):
         assert titles == [f"Live{i}" for i in range(n_events)], (
             f"{titles}, seen={seen_last_ids}"
         )
-        # the server really did replay an overlap (test is armed)
+        # the server really did replay an overlap (test is armed), and
+        # the feed counted the ids it dropped
         assert any(last is not None for last in seen_last_ids)
+        assert feed.replay_drops >= overlap
     finally:
         feed.close()
         httpd.shutdown()
@@ -890,18 +986,16 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
     """commit() bounds the driver buffer to the uncommitted window and
     persists the resumption id; a NEW feed (driver restart) presents
     the persisted id on its first request."""
-    from rc_scanner_spark.schemas import CHANGE_SCHEMA as SCHEMA
-    from rc_scanner_spark.sources.sse import ChangeStreamReader
+    from rc_scanner_spark.sources.sse import LiveChangeReader
 
     idfile = str(tmp_path / "last_id")
     srv = _LoopbackSSE(n_events=6)
-    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
+    r = LiveChangeReader(srv.url(), idfile)
     try:
         feed = r._live_feed()
         assert _wait_for(lambda: feed.size() == 6)
         assert r.latestOffset() == {"line": 6}
-        parts = r.partitions({"line": 0}, {"line": 6})
-        rows = [row for p in parts for row in p.rows]
+        rows = list(r.getCache({"line": 0}, {"line": 6}))
         assert len(rows) == 6
         r.commit({"line": 4})
         # committed prefix trimmed, uncommitted window intact
@@ -922,7 +1016,7 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
     # restart: fresh server, fresh reader -> resumes from the last
     # COMMITTED id, so the server replays the uncommitted tail (4, 5)
     srv2 = _LoopbackSSE(n_events=6)
-    r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
+    r2 = LiveChangeReader(srv2.url(), idfile)
     try:
         r2._live_feed()
         assert _wait_for(lambda: len(srv2.seen_last_ids) > 0)
@@ -930,9 +1024,9 @@ def test_sse_loopback_commit_trims_and_persists_id(tmp_path):
         # replayed events must ALIGN to the checkpoint offset, not be
         # cleared: the idfile's persisted offset restores _base=4
         # directly, so the buffered replay maps to global offsets 4..
-        # before any partitions() call (latestOffset never regresses).
+        # before any getCache() call (latestOffset never regresses).
         assert r2._feed._base == 4 and r2._feed._aligned
-        r2.partitions({"line": 4}, {"line": 4})
+        list(r2.getCache({"line": 4}, {"line": 4}))
         assert _wait_for(lambda: r2._feed.size() >= 5)
         replay = r2._feed.slice(4, 6)
         assert len(replay) >= 1  # the recovered uncommitted events
@@ -948,20 +1042,19 @@ def test_sse_restart_waits_for_replay_before_aligning(tmp_path):
     Last-Event-ID replay must land at 4.. before the feed aligns to
     the checkpoint (6), or it is cleared and 4-5 come back as 6-7."""
     from rc_scanner_spark.schemas import CHANGE_SCHEMA as SCHEMA
-    from rc_scanner_spark.sources.sse import ChangeStreamReader
+    from rc_scanner_spark.sources.sse import LiveChangeReader
 
     idfile = str(tmp_path / "last_id")
     with open(idfile, "w", encoding="utf-8") as f:
         f.write("3\n4")
     srv = _LoopbackSSE(n_events=8, delay=0.5)  # replay arrives late
-    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
+    r = LiveChangeReader(srv.url(), idfile)
     try:
-        assert r.partitions({"line": 6}, {"line": 6})[0].rows == []
+        assert list(r.getCache({"line": 6}, {"line": 6})) == []
         assert _wait_for(lambda: r.latestOffset() == {"line": 8}), r.latestOffset()
         assert srv.seen_last_ids == ["3"]
-        parts = r.partitions({"line": 6}, {"line": 8})
         title = SCHEMA.fieldNames().index("title")
-        titles = [row[title] for p in parts for row in p.rows]
+        titles = [row[title] for row in r.getCache({"line": 6}, {"line": 8})]
         assert titles == ["Live6", "Live7"]
     finally:
         r.stop()
@@ -974,12 +1067,11 @@ def test_sse_idless_stream_persists_offset(tmp_path):
     restart restores _base instead of falling back to the
     clear-and-skip alignment path (ADVICE r11: the idfile went
     permanently stale while _base advanced in memory)."""
-    from rc_scanner_spark.schemas import CHANGE_SCHEMA as SCHEMA
-    from rc_scanner_spark.sources.sse import ChangeStreamReader
+    from rc_scanner_spark.sources.sse import LiveChangeReader
 
     idfile = str(tmp_path / "last_id")
     srv = _LoopbackSSE(n_events=6, ids=False)
-    r = ChangeStreamReader(SCHEMA, {"url": srv.url(), "idfile": idfile})
+    r = LiveChangeReader(srv.url(), idfile)
     try:
         feed = r._live_feed()
         # >= not ==: with no Last-Event-ID to present, every ~1 s
@@ -1001,7 +1093,7 @@ def test_sse_idless_stream_persists_offset(tmp_path):
     # presented (nothing to replay on an id-less stream), and
     # latestOffset never regresses below the checkpointed 4
     srv2 = _LoopbackSSE(n_events=6, ids=False)
-    r2 = ChangeStreamReader(SCHEMA, {"url": srv2.url(), "idfile": idfile})
+    r2 = LiveChangeReader(srv2.url(), idfile)
     try:
         r2._live_feed()
         assert r2._feed._base == 4 and r2._feed._aligned
@@ -1134,6 +1226,58 @@ def test_sse_loopback_live_structured_streaming(spark, tmp_path):
     assert got2 == [f"Live{i}" for i in range(8)], (
         f"phase2: {got2}, seen={srv2.seen_last_ids}"
     )
+
+
+def test_sse_live_restart_after_first_batch_loses_nothing(spark, tmp_path):
+    """A live query stopped right after its first data batch records
+    that batch in the idfile, though Spark never committed it to the
+    source.  Its restart presents the Last-Event-ID to a server that,
+    without one, would start at "now" (event 6): the events sent while
+    the query was down (4, 5) are replayed, none is lost and none is
+    delivered twice."""
+    spark.dataSource.register(RcChangeDataSource)
+    idfile = str(tmp_path / "last_id")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+
+    def run(srv, n_titles):
+        df = (
+            spark.readStream.format("rcstream")
+            .option("url", srv.url())
+            .option("idfile", idfile)
+            .load()
+        )
+        q = (
+            df.writeStream.format("json")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            assert _wait_for(
+                lambda: sum(p["numInputRows"] for p in q.recentProgress) >= n_titles,
+                timeout=180.0,
+            ), q.recentProgress
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(r.title for r in spark.read.schema(CHANGE_SCHEMA).json(out).collect())
+
+    srv = _LoopbackSSE(n_events=4)
+    try:
+        assert run(srv, 4) == [f"Live{i}" for i in range(4)]
+    finally:
+        srv.close()
+    with open(idfile, encoding="utf-8") as f:
+        assert f.read() == "3\n4"
+
+    srv2 = _LoopbackSSE(n_events=8, now=6)
+    try:
+        got = run(srv2, 4)
+    finally:
+        srv2.close()
+    assert srv2.seen_last_ids[0] == "3"
+    assert got == [f"Live{i}" for i in range(8)], got
 
 
 def test_rcstream_live_query_opens_one_connection(spark, tmp_path):
