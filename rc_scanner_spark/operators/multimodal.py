@@ -1,10 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The container has no image/audio codecs, so the decode step is a
-clearly-marked stub (deterministic fake features / NotImplementedError
-for real codecs).  Everything Spark-side is real and tested: schema,
-Arrow batch shape, ``mapInPandas`` signatures, partition-size control.
+No image/audio codecs are installed, so the decode step is a
+clearly-marked stub (deterministic fake features).  Everything
+Spark-side is real and tested: schema, Arrow batch shape,
+``mapInPandas`` signatures, partition-size control.
 
 At 100 TB the binary payloads dominate: keep them in their own column
 (parquet stores them contiguously), never groupBy/shuffle the payload
@@ -37,14 +37,6 @@ def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
         (F.length(F.col(text_col)) % 640).cast("int").alias("width"),
         (F.length(F.col(text_col)) % 480).cast("int").alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
-    )
-
-
-def decode_image(payload: bytes) -> "object":
-    """Real codec decode — STUB.  The image/audio libraries are not in
-    this container; wire Pillow/torchaudio here in production."""
-    raise NotImplementedError(
-        "media decode requires codec libraries not present in this environment"
     )
 
 
@@ -82,46 +74,6 @@ def extract_features(media_df: DataFrame, batch_hint: int = 1024) -> DataFrame:
             )
 
     return media_df.select("doc_id", "media").mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def _fake_resize(payload: bytes, n_out: int) -> bytes:
-    """Deterministic stand-in for a codec resize: nearest-neighbour
-    sample of the payload bytes to ``n_out`` bytes.  A real
-    implementation decodes, resizes, re-encodes via Pillow."""
-    if payload is None or n_out <= 0:
-        return b""
-    n = len(payload)
-    if n == 0:
-        return b""
-    return bytes(payload[(i * n) // n_out] for i in range(n_out))
-
-
-def resize_media(
-    media_df: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Resize binary image payloads to ``width`` x ``height`` via
-    ``mapInPandas`` — same MEDIA_SCHEMA out as in, so resize stages
-    compose (thumbnail cascade).  The byte transform is the stubbed
-    fake codec (`_fake_resize`); the Spark side — Arrow batching,
-    schema preservation, null passthrough, metadata update — is real.
-
-    Scale note: output partition sizes shrink by (w*h / original), so
-    follow with AQE coalesce (on) or ``coalesce()`` before writing to
-    avoid a small-files explosion at the sink.
-    """
-    n_out = width * height
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["media"] = pdf["media"].map(
-                lambda b: None if b is None else _fake_resize(b, n_out)
-            )
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return media_df.mapInPandas(op, schema=MEDIA_SCHEMA)
 
 
 def frame_sample_plan(media_df: DataFrame, every_ms: int = 1000) -> DataFrame:

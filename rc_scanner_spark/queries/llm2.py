@@ -18,8 +18,6 @@ Design notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -756,10 +754,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned 115 s).  So the pin applies only while the corpus
     # scans below one split — the same size guard tables._spread
     # uses to abstain at production scale.
-    from ..tables import table_path, _parse_bytes
+    from ..tables import table_path, _parse_bytes, _table_bytes
 
     try:
-        corpus_bytes = os.path.getsize(table_path(sf_dir, "documents"))
+        corpus_bytes = _table_bytes(table_path(sf_dir, "documents"))
     except OSError:
         corpus_bytes = 1 << 62
     max_part = _parse_bytes(

@@ -236,14 +236,6 @@ _BLOOM_WORDS = 16  # 1024 bits
 _BLOOM_K = 3
 
 
-def _bloom_positions(key):
-    """k hash bit positions for a key: pmod(xxhash64(key, seed), m)."""
-    return [
-        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(_BLOOM_WORDS * 64))
-        for i in range(_BLOOM_K)
-    ]
-
-
 def q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-pruned dimension join: revenue per brand for large parts
     (p_size >= 46).  The fact side (lineitem) is pre-filtered by a

@@ -7,27 +7,22 @@ losing position (SSE offsets exist at meta.offset/meta.id, utils.py:10,
 but are unused).  This source fixes that: offsets are first-class, so
 Structured Streaming checkpoints give restart recovery.
 
-Two modes:
+With the ``url`` option set, on the query's first offset call the
+reader (``LiveChangeReader``) opens one connection to an SSE endpoint
+(text/event-stream) with a pooled ``requests`` session and buffers
+events in the driver's source process; the query's ``stop()`` closes
+it.  Offsets are global event positions.  The served range is trimmed
+from the buffer, and with the ``idfile`` option its last SSE event id
+and end offset are persisted, on the first offset call after Spark
+commits the batch.  Delivery: exactly-once within a driver lifetime
+(checkpointed offsets), at-least-once across driver restarts
+(Last-Event-ID re-subscription — the buffer dies with the process,
+the id file does not).  Exercised offline against a loopback SSE
+server in tests/test_streaming.py.  Offline replay of a JSON-lines
+file of Change events is Spark's own JSON file source
+(``streaming.pipeline.read_change_stream``).
 
-- ``path`` option set -> **replay mode** (``ChangeStreamReader``):
-  reads a JSON-lines file of Change events; the offset is the line
-  number, and each micro-batch is split into partitions of
-  ``batchlines`` lines (default 100) that executor Python workers
-  read.  Fully offline, CI-safe, used by the tests.
-- ``url`` option set -> **live mode** (``LiveChangeReader``): on the
-  query's first offset call, opens one connection to an SSE endpoint
-  (text/event-stream) with a pooled ``requests`` session and buffers
-  events in the driver's source process; the query's ``stop()``
-  closes it.  Offsets are global event positions.  The served range
-  is trimmed from the buffer, and with the ``idfile`` option its last
-  SSE event id and end offset are persisted, on the first offset call
-  after Spark commits the batch.  Delivery: exactly-once within a
-  driver lifetime (checkpointed offsets), at-least-once across driver
-  restarts (Last-Event-ID re-subscription — the buffer dies with the
-  process, the id file does not).  Exercised offline against a
-  loopback SSE server in tests/test_streaming.py.
-
-Live data path: the events already sit in the driver, so no executor
+Data path: the events already sit in the driver, so no executor
 Python worker touches them.  Spark's streaming source runner (the
 Python process the driver JVM starts for the source) plans each
 micro-batch as one partition, asks the reader for the range's rows
@@ -131,10 +126,9 @@ class _LiveFeed:
     Last-Event-ID so no events are lost across connection drops (the
     reference loses position, scanner.py:82-88); with ``idfile`` set
     the last *committed* SSE event id also survives driver restarts —
-    the fresh driver re-subscribes from it, making live mode
+    the fresh driver re-subscribes from it, making the source
     at-least-once across restarts (exactly-once within a driver
-    lifetime via checkpointed offsets; replay mode is exactly-once
-    unconditionally)."""
+    lifetime via checkpointed offsets)."""
 
     def __init__(self, url: str, timeout: float = 30.0, idfile: str | None = None):
         import requests
@@ -356,55 +350,9 @@ class _LiveFeed:
                 pass  # persistence is best-effort; worst case re-reads more
 
 
-class _LinePartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
-class ChangeStreamReader(DataSourceStreamReader):
-    """Replay-mode stream reader: a JSON-lines file of Change events,
-    offset = line count, one partition per ``batchlines`` lines."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.path = options.get("path")
-        self.batch_lines = int(options.get("batchlines", "100"))
-        if not self.path:
-            raise ValueError("rcstream source needs a 'path' (replay) or 'url' (live)")
-
-    def _count_lines(self) -> int:
-        try:
-            with open(self.path, "rb") as f:
-                return sum(1 for _ in f)
-        except FileNotFoundError:
-            return 0
-
-    def initialOffset(self) -> dict:
-        return {"line": 0}
-
-    def latestOffset(self) -> dict:
-        return {"line": self._count_lines()}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        lo, hi = start["line"], end["line"]
-        step = max(self.batch_lines, 1)
-        parts = [_LinePartition(self.path, s, min(s + step, hi)) for s in range(lo, hi, step)]
-        return parts or [_LinePartition(self.path, lo, lo)]
-
-    def read(self, partition: _LinePartition) -> Iterator[tuple]:
-        with open(partition.path, "r", encoding="utf-8") as f:
-            for i, line in enumerate(f):
-                if i < partition.start:
-                    continue
-                if i >= partition.end:
-                    break
-                yield _row(json.loads(line))
-
-
 class LiveChangeReader(_SimpleStreamReaderWrapper):
-    """Live-mode stream reader: offsets are global positions in the
-    SSE feed's driver-side buffer.
+    """The ``rcstream`` stream reader: offsets are global positions in
+    the SSE feed's driver-side buffer.
 
     It plugs into the prefetch protocol of PySpark's private
     ``_SimpleStreamReaderWrapper``: the streaming source runner sends
@@ -525,6 +473,9 @@ class RcChangeDataSource(DataSource):
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         url = self.options.get("url")
-        if url and not self.options.get("path"):
-            return LiveChangeReader(url, self.options.get("idfile"))
-        return ChangeStreamReader(schema, self.options)
+        if not url:
+            raise ValueError(
+                "rcstream needs the 'url' option (an SSE endpoint); replay a "
+                "JSON-lines file with streaming.pipeline.read_change_stream"
+            )
+        return LiveChangeReader(url, self.options.get("idfile"))

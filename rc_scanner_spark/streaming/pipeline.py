@@ -1,12 +1,14 @@
 """Streaming scanner pipeline.
 
 The reference's pull loop (scanner.py:75-81) becomes a Structured
-Streaming query: file-replay (CI-safe) or the custom SSE source feeds
-``CHANGE_SCHEMA`` rows; the same ``FilterSpec`` compiles the
-predicates; dedup is ``dropDuplicates`` backed by the state store
-(unbounded, matching the reference's never-expiring flag-log dedup,
-filter_.py:90-102 — add a watermark to bound state when the product
-semantics allow); the flag log is Spark's built-in JSON file sink.
+Streaming query: the custom SSE source (``rcstream``,
+``sources/sse.py``) or Spark's JSON file source over recorded Change
+lines (``read_change_stream``, offline) feeds ``CHANGE_SCHEMA`` rows;
+the same ``FilterSpec`` compiles the predicates; dedup is
+``dropDuplicates`` backed by the state store (unbounded, matching the
+reference's never-expiring flag-log dedup, filter_.py:90-102 — add a
+watermark to bound state when the product semantics allow); the flag
+log is Spark's built-in JSON file sink.
 
 Delivery: the reference is at-most-once with no offset tracking
 (SSE offsets present but unused, utils.py:10).  Checkpointing upgrades
@@ -118,134 +120,6 @@ def build_pipeline(
         .withColumn("filename", sanitize_filename(F.col("user"), F.col("revision.new")))
         .withColumn("filter", F.lit(spec.name))
     )
-
-
-def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    window_len: str = "5 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling/sliding event-time aggregation — the
-    late-data policy the reference lacks (events processed on arrival,
-    SURVEY.md §2.B streaming row)."""
-    win = (
-        F.window(F.col(ts_col), window_len, slide)
-        if slide
-        else F.window(F.col(ts_col), window_len)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def session_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked SESSION-window aggregation: per-user activity
-    sessions closed by a ``gap`` of inactivity (F.session_window — the
-    native streaming form whose batch twin is the gap-based
-    sessionization in queries/relational.py session_windows).
-
-    State per (user, open session) only; the watermark closes sessions
-    whose gap has provably expired, so state is bounded by active
-    users x watermark horizon — the scale contract a 100 TB stream
-    needs (the batch twin's window scan has no such bound)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sess"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def attribution_join(
-    clicks: DataFrame,
-    views: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    max_lag: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join (the ad-attribution shape): each
-    click matches the same user's views in the preceding ``max_lag``.
-
-    Both sides carry watermarks, so the join state store evicts rows
-    older than watermark + lag — bounded state at any scale.  The join
-    key + time-range condition shuffles both streams on ``key`` once.
-    The event-time range condition is also what makes ``how='left
-    outer'`` legal: it lets the engine declare a left row unmatched at
-    watermark expiry instead of holding it forever.
-    """
-    c = clicks.select(
-        F.col(key).alias("k"),
-        F.col(ts_col).alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    ).withWatermark("click_ts", watermark)
-    v = views.select(
-        F.col(key).alias("vk"),
-        F.col(ts_col).alias("view_ts"),
-        F.col("event_id").alias("view_id"),
-    ).withWatermark("view_ts", watermark)
-    return c.join(
-        v,
-        F.expr(
-            f"k = vk AND view_ts >= click_ts - INTERVAL {max_lag} AND view_ts < click_ts"
-        ),
-        how,
-    ).select(F.col("k").alias(key), "click_id", "click_ts", "view_id", "view_ts")
-
-
-def attribution_join_outer(
-    clicks: DataFrame,
-    views: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    max_lag: str = "10 minutes",
-) -> DataFrame:
-    """LEFT OUTER attribution join: clicks with NO view in the
-    preceding ``max_lag`` are still emitted (view columns NULL) once
-    the watermark proves no match can arrive — the
-    unattributed-traffic report.  Thin delegate so inner and outer
-    semantics can never drift."""
-    return attribution_join(
-        clicks, views, key, ts_col, watermark, max_lag, how="leftOuter"
-    )
-
-
-def dedup_within_watermark(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Key dedup with *bounded* state: duplicates arriving within the
-    watermark horizon are dropped, state older than the horizon is
-    evicted.  The scale-safe alternative to the reference's unbounded
-    flag-log dedup (filter_.py:90-102) when product semantics allow a
-    horizon."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 FLAGLOG_COLUMNS = ("filter", "title", "user", "date", "filename", "match_message")

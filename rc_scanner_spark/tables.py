@@ -38,6 +38,23 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _table_bytes(path: str) -> int:
+    """Bytes of a table's data: the file itself, or the data files
+    under a directory layout (names starting with ``_`` or ``.`` --
+    ``_SUCCESS``, ``_temporary/``, ``.crc`` -- are not data, as in
+    Spark's own listing).  Local filesystem only; raises OSError when
+    ``path`` does not exist."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                total += os.path.getsize(os.path.join(root, f))
+    return total
+
+
 def _spread(spark: SparkSession, df: DataFrame, path: str, name: str) -> DataFrame:
     """Fan a narrow scan of a CPU-heavy table out across cores.
 
@@ -50,21 +67,19 @@ def _spread(spark: SparkSession, df: DataFrame, path: str, name: str) -> DataFra
 
     At production scale this is a structural no-op: a 100 TB table
     scans as tens of thousands of splits and the size guard below
-    abstains.  Disable with SPARK_GRAFT_SPREAD=0.
+    abstains.
     """
     if name not in _SPREAD_TABLES:
         return df
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     try:
-        size = os.path.getsize(path)
+        size = _table_bytes(path)
     except OSError:
         return df
     if size < _SPREAD_MIN_BYTES:
         return df
-    # Planned scan partitions if Spark could split the file (it cannot
+    # Planned scan partitions if Spark could split the table (it cannot
     # below a row group, so this over-estimates -> only abstain when
-    # the file is large enough to split properly on its own).
+    # the table is large enough to split properly on its own).
     max_part = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
@@ -239,8 +254,8 @@ def invalidate_schema_cache(path: str | None = None) -> None:
 # object across queries holds NO data (execution still scans parquet;
 # persisted/derived frames are tracked elsewhere), exactly like the
 # per-query shared-frame memos in operators/dedup.py.  Entries carry
-# the same directory stamp as the schema cache plus every input the
-# _spread decision reads (env flag, maxPartitionBytes, parallelism),
+# the same directory stamp as the schema cache plus every session input
+# the _spread decision reads (maxPartitionBytes, parallelism),
 # so a fixture overwrite or a re-configured session re-loads instead
 # of serving a stale plan.
 _DF_CACHE: dict[tuple[int, str], tuple[object, object, DataFrame]] = {}
@@ -253,7 +268,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (id(spark.sparkContext), path)
     stamp = _path_stamp(path)
     spread_inputs = (
-        os.environ.get("SPARK_GRAFT_SPREAD", "1"),
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"),
         spark.sparkContext.defaultParallelism,
     )

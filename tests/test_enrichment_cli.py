@@ -1,42 +1,15 @@
-"""Enrichment lookup operator (S2/S3 UDF form), CLI entry point (C3),
-flaglog array export (K3 compat), CSV/JSON source round-trips."""
+"""CLI entry point (C3), flaglog array export (K3 compat), CSV/JSON
+source round-trips."""
 
 from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
-from rc_scanner_spark.operators.enrichment import lookup_enrich
 from rc_scanner_spark.sinks.flaglog import export_array
 
 from tests.conftest import make_change, write_changes_jsonl
-
-
-def test_lookup_enrich_batch_dedup_and_null(spark):
-    def fake_fetch(keys):
-        # runs on executors: encode the batch's distinct-key count in
-        # the value so the dedup behavior is observable from the data
-        n = len(keys)
-        return {k: n * 100 + k * 10 for k in keys if k != 3}  # key 3 "fails"
-
-    df = spark.createDataFrame(
-        [(1,), (2,), (2,), (3,), (1,)], "user_key int"
-    ).coalesce(1)
-    out = lookup_enrich(df, "user_key", "editcount", "long", fake_fetch).collect()
-    got = {(r["user_key"], r["editcount"]) for r in out}
-    # n=3 distinct keys in the single batch (5 rows deduped to 3)
-    assert got == {(1, 310), (2, 320), (3, None)}
-
-
-def test_lookup_enrich_fetch_exception_is_null(spark):
-    def broken(keys):
-        raise RuntimeError("connection lost")
-
-    df = spark.createDataFrame([(1,), (2,)], "k int")
-    out = lookup_enrich(df, "k", "v", "string", broken).collect()
-    assert all(r["v"] is None for r in out)
 
 
 def test_cli_batch_mode(spark, tmp_path, capsys):

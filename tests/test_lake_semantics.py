@@ -123,146 +123,3 @@ def test_contract_validate_splits_clean_and_violations(spark):
         (5, "v_in_range"),
         (5, "name_matches"),
     }
-
-
-def test_jsonl_sink_writes_atomically(spark, tmp_path):
-    """The custom Python DataSource writer: committed parts only, no
-    temp files left, content round-trips."""
-    import json
-    import os
-
-    from rc_scanner_spark.sinks.jsonl_sink import JsonlSinkDataSource
-
-    spark.dataSource.register(JsonlSinkDataSource)
-    out = str(tmp_path / "jsonl_out")
-    df = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "gamma")], "id bigint, name string"
-    ).repartition(2)
-    df.write.format("jsonlsink").option("path", out).mode("append").save()
-
-    files = sorted(os.listdir(out))
-    assert files and all(f.startswith("part-") for f in files)
-    rows = []
-    for f in files:
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert sorted((r["id"], r["name"]) for r in rows) == [
-        (1, "alpha"),
-        (2, "beta"),
-        (3, "gamma"),
-    ]
-
-
-def test_jsonl_stream_sink_commits_per_epoch(spark, tmp_path):
-    """Streaming custom sink: every micro-batch lands in its own
-    epoch=N directory, rows round-trip, no temp files remain."""
-    import json
-    import os
-
-    from rc_scanner_spark.sinks.jsonl_sink import JsonlSinkDataSource
-
-    spark.dataSource.register(JsonlSinkDataSource)
-    src = str(tmp_path / "stream_src")
-    df = spark.createDataFrame(
-        [(i, f"n{i}") for i in range(6)], "id bigint, name string"
-    )
-    df.repartition(3).write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "stream_out")
-    q = (
-        spark.readStream.schema("id bigint, name string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.format("jsonlsink")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt_jsonl"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    epochs = [d for d in os.listdir(out) if d.startswith("epoch=")]
-    assert len(epochs) >= 2
-    assert not [f for f in os.listdir(out) if f.startswith("_tmp-")]
-    rows = []
-    for e in epochs:
-        for f in os.listdir(os.path.join(out, e)):
-            with open(os.path.join(out, e, f)) as fh:
-                rows += [json.loads(line) for line in fh]
-    assert sorted(r["id"] for r in rows) == list(range(6))
-
-
-def test_jsonl_stream_sink_restart_no_duplication(spark, tmp_path):
-    """Stop the stream, add data, restart from the same checkpoint:
-    every row lands exactly once across the two runs' epochs."""
-    import json
-    import os
-
-    from rc_scanner_spark.sinks.jsonl_sink import JsonlSinkDataSource
-
-    spark.dataSource.register(JsonlSinkDataSource)
-    src = str(tmp_path / "restart_src")
-    out = str(tmp_path / "restart_out")
-    ckpt = str(tmp_path / "restart_ckpt")
-
-    def run_once():
-        q = (
-            spark.readStream.schema("id bigint, name string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.format("jsonlsink")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, name string") \
-        .coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    spark.createDataFrame([(3, "c"), (4, "d")], "id bigint, name string") \
-        .coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    rows = []
-    for e in os.listdir(out):
-        if not e.startswith("epoch="):
-            continue
-        for f in os.listdir(os.path.join(out, e)):
-            with open(os.path.join(out, e, f)) as fh:
-                rows += [json.loads(line) for line in fh]
-    assert sorted(r["id"] for r in rows) == [1, 2, 3, 4]
-
-
-def test_compaction_plan_flags_fragmented_partitions(spark, tmp_path):
-    """A day-partitioned write with forced fragmentation (8 files in
-    one partition, 1 in the other) yields a plan that flags only the
-    fragmented partition and conserves bytes/rows."""
-    from pyspark.sql import functions as F
-
-    from rc_scanner_spark.operators.maintenance import (
-        compaction_plan,
-        file_stats,
-    )
-
-    d = str(tmp_path / "frag")
-    base = spark.range(2000).select(
-        F.col("id"),
-        F.when(F.col("id") % 2 == 0, "2024-01-01").otherwise("2024-01-02").alias("day"),
-    )
-    # day=2024-01-01 written as 8 files, day=2024-01-02 as 1.
-    base.filter("day = '2024-01-01'").repartition(8).write.partitionBy(
-        "day"
-    ).mode("overwrite").parquet(d)
-    base.filter("day = '2024-01-02'").coalesce(1).write.partitionBy(
-        "day"
-    ).mode("append").parquet(d)
-    stats = file_stats(spark, d).collect()
-    assert sum(r.rows for r in stats) == 2000
-    plan = {r.partition_dir.rsplit("=", 1)[-1]: r for r in compaction_plan(spark, d, target_bytes=64 * 1024 * 1024).collect()}
-    assert plan["2024-01-01"].n_files == 8
-    assert plan["2024-01-02"].n_files == 1
-    assert plan["2024-01-01"].needs_compaction
-    assert not plan["2024-01-02"].needs_compaction
-    assert plan["2024-01-01"].target_files == 1
-    assert plan["2024-01-01"].total_rows == 1000

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from rc_scanner_spark.operators.multimodal import (
     attach_fake_media,
-    decode_image,
     extract_features,
     frame_sample_plan,
 )
@@ -48,11 +47,6 @@ def test_extract_features_roundtrip(spark, media):
         assert all(0.0 <= x < 1.0 for x in r["feature"])
 
 
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
 def test_frame_sample_plan(spark):
     df = spark.createDataFrame(
         [(1, None, None), (2, None, 3500)],
@@ -61,35 +55,6 @@ def test_frame_sample_plan(spark):
     rows = frame_sample_plan(df, every_ms=1000).collect()
     got = sorted((r["doc_id"], r["frame_ts_ms"]) for r in rows)
     assert got == [(2, 0), (2, 1000), (2, 2000), (2, 3000)]
-
-
-def test_resize_media_preserves_schema_and_composes(spark, media):
-    from rc_scanner_spark.operators.multimodal import _fake_resize, resize_media
-
-    small = resize_media(media, width=16, height=4)
-    assert small.dtypes == media.dtypes
-    rows = {r["doc_id"]: r for r in small.collect()}
-    src = {r["doc_id"]: bytes(r["media"]) for r in media.collect()}
-    assert set(rows) == set(src)
-    for doc_id, r in rows.items():
-        assert r["width"] == 16 and r["height"] == 4
-        assert bytes(r["media"]) == _fake_resize(src[doc_id], 64)
-        assert len(r["media"]) == 64
-    # resize stages compose: same schema in and out
-    thumb = resize_media(small, width=2, height=2).collect()
-    assert all(len(r["media"]) == 4 for r in thumb)
-
-
-def test_resize_media_null_payload_passthrough(spark):
-    from rc_scanner_spark.operators.multimodal import resize_media
-
-    df = spark.createDataFrame(
-        [(1, None, "image/fake", 10, 10, None)],
-        "doc_id long, media binary, media_type string, width int, "
-        "height int, duration_ms long",
-    )
-    out = resize_media(df, width=8, height=8).collect()
-    assert out[0]["media"] is None
 
 
 def test_phash_identical_payloads_distance_zero(spark):

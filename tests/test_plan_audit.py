@@ -4,17 +4,27 @@ An unpartitioned Window funnels its entire input through ONE task — a
 single-node choke point that a local bench never surfaces but a
 1000-executor cluster dies on.  This suite fails if anyone reintroduces
 one outside the documented bounded-cardinality sites.
+
+It also pins a compact plan fingerprint (``tools/audit_plans.audit``:
+exchanges, join strategies, pushed filters, Python nodes, codegen
+spans) for every bench headline query, in ``plan_fingerprints.json``
+beside this file.  The full plan text is reproducible with
+``tools/capture_plans.py``.
 """
 
 from __future__ import annotations
 
+import json
 import sys
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
 
-from tools.audit_plans import _top_level_groups, cartesians, global_windows
+from tools.audit_plans import _top_level_groups, audit, cartesians, global_windows
 
 from .conftest import SF_SMOKE
+
+FINGERPRINTS = Path(__file__).with_name("plan_fingerprints.json")
 
 # Global (unpartitioned) Window nodes that are ALLOWED because their
 # input frame is bounded by construction, independent of corpus size;
@@ -341,15 +351,24 @@ def test_no_unbounded_global_windows_or_cartesians(spark):
     prints as InMemoryTableScan — hiding the subtree nodes this audit
     counts, so pinned counts silently drop below their allowlist
     values.  Clearing both cache layers reproduces the
-    fresh-session plans the pins were measured on."""
+    fresh-session plans the pins were measured on.
+
+    The same plans are fingerprinted: every bench headline query (and
+    any other query pinned in plan_fingerprints.json) must match its
+    committed fingerprint.  On a change the failure prints the fresh
+    fingerprints; pasting them into the file acknowledges it."""
+    import bench
     from rc_scanner_spark.operators.dedup import release_caches
     from rc_scanner_spark.queries import build_registry
 
     release_caches()
     spark.catalog.clearCache()
 
+    pinned = json.loads(FINGERPRINTS.read_text())
+    fingerprinted = set(bench.HEADLINE) | set(pinned)
     bad_win: dict[str, int] = {}
     bad_cart: dict[str, int] = {}
+    changed: dict[str, dict] = {}
     for name, spec in sorted(build_registry().items()):
         df = spec.fn(spark, SF_SMOKE)
         plan = (
@@ -364,9 +383,15 @@ def test_no_unbounded_global_windows_or_cartesians(spark):
         c = cartesians(plan)
         if c != ALLOWED_CARTESIANS.get(name, 0):
             bad_cart[name] = c
+        if name in fingerprinted and (fp := audit(plan)) != pinned.get(name):
+            changed[name] = fp
     assert not bad_win, (
         f"unpartitioned Window outside allowlist (or allowlist drift): {bad_win}"
     )
     assert not bad_cart, (
         f"cartesian join outside allowlist (or allowlist drift): {bad_cart}"
+    )
+    assert not changed, (
+        f"plan fingerprint changed for {sorted(changed)}; if intended, paste "
+        f"into {FINGERPRINTS.name}:\n{json.dumps(changed, indent=2, sort_keys=True)}"
     )

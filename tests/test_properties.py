@@ -204,42 +204,6 @@ def test_partitioning_invariance_of_dedup_and_sampling(spark, tmp_path):
         assert a == b, f"{fn.__name__} differs across physical layouts"
 
 
-def test_udtf_matches_catalyst_twin(spark):
-    """The Python UDTF and the pure-Catalyst sentence splitter must
-    agree on the same documents (the UDTF covers the API surface; the
-    Catalyst form is the hot-path implementation)."""
-    import pyspark.sql.functions as F
-
-    from rc_scanner_spark.functions.udtfs import (
-        sentences_catalyst,
-        split_sentences_lateral,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "One sentence. And two! Finally three?"),
-            (2, "no terminator at all"),
-            (3, ""),
-            (4, None),
-        ],
-        "doc_id bigint, text string",
-    )
-    via_udtf = {
-        (r["doc_id"], r["sent_idx"]): (r["sentence"], r["n_words"])
-        for r in split_sentences_lateral(spark, docs).collect()
-    }
-    via_catalyst = {}
-    for r in docs.select(
-        "doc_id", F.posexplode(sentences_catalyst(F.col("text")))
-    ).collect():
-        via_catalyst[(r["doc_id"], r["pos"])] = (
-            r["col"],
-            len(r["col"].split()),
-        )
-    assert via_udtf == via_catalyst
-    assert (1, 2) in via_udtf  # three sentences from doc 1
-
-
 _REGEX_ATOMS = ["a", "b", "c", "x", r"\d", r"\w", r"\s", "[ab]", "[^c]", "."]
 _REGEX_QUANTS = ["", "*", "+", "?", "{1,2}"]
 

@@ -13,8 +13,10 @@ loudly instead.
 
 Formatted-explain operator ids are assigned children-first, so in a
 linear chain an ancestor's id is strictly greater than its child's —
-the assertions below lean on that (and on the committed plan captures
-in plans/r14 and plans/r15 showing the same shape).
+the assertions below lean on that (and on the plan captures under
+plans/r14 and plans/r15 in git history showing the same shape, e.g.
+``git show bc6bdcb:plans/r15/llm_prep_pipeline_after.txt``;
+``tools/capture_plans.py`` re-captures them).
 """
 
 from __future__ import annotations

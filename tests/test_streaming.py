@@ -1,7 +1,7 @@
 """Streaming-path tests: file replay through the scanner pipeline,
-the custom rcstream DataSource (offset tracking), watermarked windows,
-stateful dedup across micro-batches, the flag log's JSON file sink.
-All offline (file sources + memory sinks)."""
+stateful dedup across micro-batches and restarts, the flag log's JSON
+file sink, and the custom rcstream DataSource (offset tracking, SSE
+parsing, reconnects) against a loopback SSE server.  All offline."""
 
 from __future__ import annotations
 
@@ -19,8 +19,6 @@ from rc_scanner_spark.streaming.pipeline import (
     build_pipeline,
     read_change_stream,
     start_flaglog_sink,
-    session_counts,
-    windowed_counts,
 )
 
 from tests.conftest import make_change, write_changes_jsonl
@@ -47,26 +45,29 @@ def _spec():
     )
 
 
-def test_rcstream_source_replay_and_dedup(spark, users, revisions, tmp_path):
-    jsonl = str(tmp_path / "changes.jsonl")
-    write_changes_jsonl(jsonl, [make_change(i, f"Page{i % 5}") for i in range(20)])
-    spark.dataSource.register(RcChangeDataSource)
-    changes = (
-        spark.readStream.format("rcstream")
-        .option("path", jsonl)
-        .option("batchlines", "7")  # forces multiple micro-batches
-        .load()
-    )
+def test_change_stream_replay_dedups_across_batches(
+    spark, users, revisions, tmp_path
+):
+    src = tmp_path / "in"
+    src.mkdir()
+    changes_all = [make_change(i, f"Page{i % 5}") for i in range(20)]
+    # four files, one per micro-batch: a title's repeats land in
+    # different batches, so the dedup must come from the state store
+    for k in range(4):
+        write_changes_jsonl(
+            str(src / f"part{k}.json"), changes_all[k * 5:(k + 1) * 5]
+        )
+    changes = read_change_stream(spark, str(src), max_files_per_trigger=1)
     out = build_pipeline(changes, _spec(), users=users, revisions=revisions)
     q = (
         out.writeStream.format("memory")
-        .queryName("rcstream_out")
+        .queryName("replay_dedup_out")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    rows = spark.sql("SELECT title, hits FROM rcstream_out").collect()
+    rows = spark.sql("SELECT title, hits FROM replay_dedup_out").collect()
     # titles cycle Page0..Page4; dedup state holds ACROSS micro-batches
     # -> one row per title; only even ids have matching text.
     titles = [r["title"] for r in rows]
@@ -93,147 +94,6 @@ def test_file_replay_source(spark, users, revisions, tmp_path):
     q.stop()
     n = spark.sql("SELECT count(*) AS n FROM replay_out").first()["n"]
     assert n == 5  # even ids 0,2,4,6,8 have 'spark text'
-
-
-def test_windowed_counts_with_watermark(spark, tmp_path):
-    # Replay the real events table as a stream; compare against the
-    # batch computation of the same windows.
-    sf = "/root/testdata/sf0.001"
-    from rc_scanner_spark.tables import load_table
-
-    ev_batch = load_table(spark, sf, "events")
-    expected = (
-        ev_batch.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .count()
-    )
-    schema = ev_batch.schema
-    ev_batch.write.mode("overwrite").parquet(str(tmp_path / "evstream"))
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(str(tmp_path / "evstream"))
-    )
-    agg = windowed_counts(stream, watermark="10 minutes", window_len="1 hour")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT count(*) AS n FROM win_out").first()["n"]
-    assert got == expected
-
-
-def test_session_counts_matches_batch(spark, tmp_path):
-    """Streaming F.session_window sessions equal the batch
-    session_window aggregation on the same replayed events — and a
-    hand fixture pins the gap semantics (events 10 min apart merge
-    under a 30-min gap; a 2-hour jump opens a new session)."""
-    sf = "/root/testdata/sf0.001"
-    from rc_scanner_spark.tables import load_table
-
-    ev_batch = load_table(spark, sf, "events")
-    expected = (
-        ev_batch.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .count()
-    )
-    ev_batch.write.mode("overwrite").parquet(str(tmp_path / "sessstream"))
-    stream = (
-        spark.readStream.schema(ev_batch.schema)
-        .parquet(str(tmp_path / "sessstream"))
-    )
-    agg = session_counts(stream, watermark="10 minutes", gap="30 minutes")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT count(*) AS n FROM sess_out").first()["n"]
-    assert got == expected
-    # planted gap semantics on a hand fixture
-    import datetime as _dt
-
-    def ts(m):
-        return _dt.datetime(2026, 1, 1, 0, m)
-
-    rows = [(1, ts(0), 7, "click", 1.0, "{}"), (2, ts(10), 7, "click", 1.0, "{}"),
-            (3, ts(20), 7, "click", 1.0, "{}")]
-    rows.append((4, _dt.datetime(2026, 1, 1, 2, 30), 7, "click", 1.0, "{}"))
-    hand = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    hand.write.mode("overwrite").parquet(str(tmp_path / "sess2"))
-    stream2 = spark.readStream.schema(hand.schema).parquet(str(tmp_path / "sess2"))
-    q2 = (
-        session_counts(stream2, watermark="10 minutes", gap="30 minutes")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_hand")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess2"))
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    hand_rows = spark.sql(
-        "SELECT n_events FROM sess_hand ORDER BY session_start"
-    ).collect()
-    assert [r.n_events for r in hand_rows] == [3, 1]
-
-
-def test_windowed_counts_sliding_matches_batch(spark, tmp_path):
-    """Hopping windows (1h width, 30m slide) through the streaming
-    path equal the batch F.window(w, slide) aggregation — the
-    streaming twin of queries/warehouse2.q_time_window_sliding."""
-    sf = "/root/testdata/sf0.001"
-    from rc_scanner_spark.tables import load_table
-
-    ev_batch = load_table(spark, sf, "events")
-    expected = {
-        (r.window_start, r.event_type): r.n
-        for r in (
-            ev_batch.groupBy(
-                F.window("ts", "1 hour", "30 minutes").alias("win"),
-                "event_type",
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.col("win.start").alias("window_start"), "event_type", "n"
-            )
-            .collect()
-        )
-    }
-    schema = ev_batch.schema
-    ev_batch.write.mode("overwrite").parquet(str(tmp_path / "evslide"))
-    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "evslide"))
-    agg = windowed_counts(
-        stream, watermark="10 minutes", window_len="1 hour", slide="30 minutes"
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("slide_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_slide"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.sql(
-            "SELECT window_start, event_type, n FROM slide_out"
-        ).collect()
-    }
-    assert got == expected
 
 
 def test_flaglog_sink_exactly_once_shape(spark, users, revisions, tmp_path):
@@ -291,7 +151,7 @@ def test_flaglog_reads_skip_uncommitted_part_files(spark, users, revisions, tmp_
 def test_rcstream_live_mode_construction():
     from pyspark.sql.datasource_internal import SimpleInputPartition
 
-    from rc_scanner_spark.sources.sse import ChangeStreamReader, LiveChangeReader
+    from rc_scanner_spark.sources.sse import LiveChangeReader
 
     # live mode constructs (buffer starts empty; the feed thread backs
     # off against the unreachable endpoint)
@@ -311,10 +171,10 @@ def test_rcstream_live_mode_construction():
             list(r.read(part))
     finally:
         r.stop()
-    with pytest.raises(ValueError):
-        ChangeStreamReader(CHANGE_SCHEMA, {})
-    with pytest.raises(ValueError):
-        RcChangeDataSource({}).streamReader(CHANGE_SCHEMA)
+    # a url is the only way in: file replay is read_change_stream's job
+    for options in ({}, {"path": "changes.jsonl"}):
+        with pytest.raises(ValueError, match="'url'"):
+            RcChangeDataSource(options).streamReader(CHANGE_SCHEMA)
 
 
 def test_sse_frame_parser():
@@ -348,172 +208,6 @@ def test_sse_parser_unterminated_frame_flushes():
 
     frames = list(parse_sse_events(["data: tail-no-blank-line"]))
     assert [f["data"] for f in frames] == ["tail-no-blank-line"]
-
-
-def test_stateful_user_activity_across_batches(spark, tmp_path):
-    from rc_scanner_spark.sources.sse import RcChangeDataSource
-    from rc_scanner_spark.streaming.stateful import user_activity
-
-    jsonl = str(tmp_path / "st.jsonl")
-    # 12 events across micro-batches of 5 lines: Alice (i%3 != 0) hits
-    # titles T1/T2 (2 distinct, 8 events), Bob hits T0/T1 (2 distinct,
-    # 4 events).
-    changes = []
-    for i in range(12):
-        user = "Alice" if i % 3 else "Bob"
-        title = f"T{i % (3 if user == 'Alice' else 2)}"
-        changes.append(make_change(i, title, user=user))
-    write_changes_jsonl(jsonl, changes)
-
-    spark.dataSource.register(RcChangeDataSource)
-    stream = (
-        spark.readStream.format("rcstream")
-        .option("path", jsonl).option("batchlines", "5").load()
-    )
-    out = user_activity(stream)
-    q = (
-        out.writeStream.format("memory").queryName("activity")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_st"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # last update per user = cumulative totals across ALL batches
-    rows = spark.sql(
-        "SELECT user, max(n_events) n, max(n_titles) t, max(last_offset) o "
-        "FROM activity GROUP BY user"
-    ).collect()
-    got = {r["user"]: (r["n"], r["t"], r["o"]) for r in rows}
-    assert got["Alice"] == (8, 2, 11)
-    assert got["Bob"] == (4, 2, 9)
-
-
-def test_stream_stream_attribution_join(spark, tmp_path):
-    from rc_scanner_spark.streaming.pipeline import attribution_join
-    from rc_scanner_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events")
-    clicks_b = ev.filter(F.col("event_type") == "click")
-    views_b = ev.filter(F.col("event_type") == "view")
-    # batch ground truth of the same interval-join condition
-    expected = (
-        clicks_b.alias("c")
-        .join(
-            views_b.alias("v"),
-            F.expr(
-                "c.user_id = v.user_id AND v.ts >= c.ts - INTERVAL 10 minutes"
-                " AND v.ts < c.ts"
-            ),
-        )
-        .count()
-    )
-    ev.write.mode("overwrite").parquet(str(tmp_path / "ss_ev"))
-    stream = spark.readStream.schema(ev.schema).parquet(str(tmp_path / "ss_ev"))
-    joined = attribution_join(
-        stream.filter(F.col("event_type") == "click"),
-        stream.filter(F.col("event_type") == "view"),
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT count(*) AS n FROM attrib").first()["n"]
-    assert got == expected
-    assert expected > 0
-
-
-@pytest.mark.slow  # certification lane
-def test_stream_stream_attribution_join_outer(spark, tmp_path):
-    """LEFT OUTER stream-stream: matched rows equal the inner join's
-    batch ground truth; unmatched clicks (NULL view columns) appear
-    once the watermark proves no view can arrive, and every one of
-    them is genuinely matchless in the batch ground truth."""
-    from rc_scanner_spark.streaming.pipeline import attribution_join_outer
-    from rc_scanner_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events")
-    clicks_b = ev.filter(F.col("event_type") == "click")
-    views_b = ev.filter(F.col("event_type") == "view")
-    inner_expected = (
-        clicks_b.alias("c")
-        .join(
-            views_b.alias("v"),
-            F.expr(
-                "c.user_id = v.user_id AND v.ts >= c.ts - INTERVAL 10 minutes"
-                " AND v.ts < c.ts"
-            ),
-        )
-        .count()
-    )
-    matchless = {
-        r.event_id
-        for r in clicks_b.alias("c")
-        .join(
-            views_b.alias("v"),
-            F.expr(
-                "c.user_id = v.user_id AND v.ts >= c.ts - INTERVAL 10 minutes"
-                " AND v.ts < c.ts"
-            ),
-            "left_anti",
-        )
-        .select("event_id")
-        .collect()
-    }
-    ev.write.mode("overwrite").parquet(str(tmp_path / "sso_ev"))
-    stream = spark.readStream.schema(ev.schema).parquet(str(tmp_path / "sso_ev"))
-    joined = attribution_join_outer(
-        stream.filter(F.col("event_type") == "click"),
-        stream.filter(F.col("event_type") == "view"),
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib_outer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sso"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT click_id, view_id FROM attrib_outer").collect()
-    matched = [r for r in rows if r.view_id is not None]
-    unmatched = [r for r in rows if r.view_id is None]
-    assert len(matched) == inner_expected
-    # watermark-released NULL rows: all genuinely matchless, and the
-    # month-long replay leaves plenty of old matchless clicks released
-    assert unmatched and all(r.click_id in matchless for r in unmatched)
-
-
-def test_dedup_within_watermark_drops_in_horizon_dupes(spark, tmp_path):
-    from rc_scanner_spark.streaming.pipeline import dedup_within_watermark
-    from rc_scanner_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events").limit(200)
-    # plant exact duplicates (same event_id, same ts) — all inside any
-    # watermark horizon, so every duplicate must be dropped
-    doubled = ev.union(ev)
-    doubled.write.mode("overwrite").parquet(str(tmp_path / "dup_ev"))
-    stream = spark.readStream.schema(ev.schema).parquet(str(tmp_path / "dup_ev"))
-    deduped = dedup_within_watermark(stream, ["event_id"], watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("ddww")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ddww"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT count(*) AS n FROM ddww").first()["n"]
-    assert got == 200
 
 
 def test_checkpoint_restart_is_exactly_once(spark, users, revisions, tmp_path):
@@ -661,93 +355,6 @@ def test_flaglog_restart_keeps_checkpoint_partitions(
     assert run() == first_parts
     titles = [r["title"] for r in spark.read.json(out_dir).collect()]
     assert sorted(titles) == ["R0", "R12", "R14", "R2", "R4"]
-
-
-def test_stateful_user_spend_evicts_and_restores(spark, tmp_path):
-    """Cumulative per-user spend through the checkpointed state store,
-    across BOTH micro-batches and a full query restart: phase 1 drains
-    one copy of the events table, the query is stopped, a second copy
-    is added, and a NEW query restarted from the same checkpoint must
-    report exactly 2x the batch aggregate per user — proof the state
-    was persisted on stop and restored on restart (state loss would
-    read 1x; reprocessing would read 3x).
-
-    Runs on whichever stateful API the environment supports
-    (user_spend_any): transformWithStateInPandas where
-    google.protobuf is importable, the applyInPandasWithState twin
-    with identical semantics otherwise — so the stateful path always
-    EXECUTES in CI instead of skip-gating (r11 brief #3)."""
-    from rc_scanner_spark.streaming.stateful import user_spend_any
-    from rc_scanner_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events").select("user_id", "value")
-    base = {
-        r["user_id"]: (r["total"], r["n"])
-        for r in ev.groupBy("user_id")
-        .agg(F.sum("value").alias("total"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    src = tmp_path / "spend_src"
-    # 4 files per phase + maxFilesPerTrigger=1 -> >=4 micro-batches
-    # per phase, so state evict/restore happens between batches too
-    ev.repartition(4).write.mode("overwrite").parquet(str(src / "a"))
-
-    results: list = []
-
-    def sink(df, _epoch):
-        results.extend(df.collect())
-
-    def start():
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        return (
-            user_spend_any(stream, checkpoint=str(tmp_path / "ckpt_spend"))
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_spend"))
-            .start()
-        )
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    ev.repartition(4).write.mode("overwrite").parquet(str(src / "b"))
-    q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-
-    # the API choice was pinned on first start; a mismatching marker
-    # must fail fast instead of running an incompatible stateful
-    # operator against the same checkpoint (ADVICE r12)
-    marker = tmp_path / "ckpt_spend" / "_stateful_api"
-    recorded = marker.read_text().strip()
-    assert recorded in (
-        "transformWithStateInPandas", "applyInPandasWithState"
-    )
-    marker.write_text("definitely-other-api")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    with pytest.raises(RuntimeError, match="state-store formats"):
-        user_spend_any(stream, checkpoint=str(tmp_path / "ckpt_spend"))
-    marker.write_text(recorded)
-
-    last = {}
-    for r in results:
-        cur = last.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[1]:
-            last[r["user_id"]] = (round(r["total_value"], 4), r["n_events"])
-    expected = {
-        u: (round(2 * total, 4), 2 * n) for u, (total, n) in base.items()
-    }
-    assert last == expected
 
 
 def test_dedup_only_suppresses_flagged_titles(spark, users, tmp_path):

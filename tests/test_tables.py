@@ -209,25 +209,73 @@ def test_df_memo_hits_and_invalidates(spark, tmp_path):
     # fresh plan after a rewrite)
 
 
-def test_df_memo_keys_on_spread_inputs(spark, tmp_path, monkeypatch):
-    """Flipping SPARK_GRAFT_SPREAD between loads must bypass the memo:
-    the spread decision is part of the returned plan."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _write_documents(path, n: int, start: int = 0) -> None:
+    """A ``documents`` file whose text does not compress (a distinct
+    hex digest per row), so its size on disk grows with ``n``."""
+    import hashlib
 
-    from rc_scanner_spark.tables import load_table
-
-    n = 4000
+    ids = range(start, start + n)
     cols = {
-        "doc_id": pa.array(range(n), pa.int64()),
-        "text": pa.array(["word " * 40] * n, pa.string()),
+        "doc_id": pa.array(ids, pa.int64()),
+        "text": pa.array(
+            [hashlib.sha512(str(i).encode()).hexdigest() for i in ids], pa.string()
+        ),
         "source": pa.array(["s"] * n, pa.string()),
     }
-    pq.write_table(pa.table(cols), str(tmp_path / "documents.parquet"))
+    pq.write_table(pa.table(cols), str(path))
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "1")
-    spread = load_table(spark, str(tmp_path), "documents")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "0")
-    unspread = load_table(spark, str(tmp_path), "documents")
+
+def _round_robin_spread(df) -> bool:
+    return "RoundRobinPartitioning" in df._jdf.queryExecution().toString()
+
+
+def test_df_memo_keys_on_spread_inputs(spark, tmp_path):
+    """Changing spark.sql.files.maxPartitionBytes between loads must
+    bypass the memo: the spread decision is part of the returned plan."""
+    from rc_scanner_spark.tables import load_table
+
+    path = tmp_path / "documents.parquet"
+    _write_documents(path, 4000)
+    size = path.stat().st_size
+    assert size >= 256 << 10, "fixture must cross the spread threshold"
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spread = load_table(spark, str(tmp_path), "documents")
+        # a split size no larger than the file: the guard abstains and
+        # the scan plans as one split
+        spark.conf.set(key, str(size))
+        unspread = load_table(spark, str(tmp_path), "documents")
+    finally:
+        spark.conf.set(key, old)
     assert spread is not unspread
+    assert _round_robin_spread(spread)
     assert unspread.rdd.getNumPartitions() == 1
+
+
+def test_load_table_spreads_multi_file_directory(spark, tmp_path):
+    """The spread guard sizes a directory-layout table by its part
+    files, not by the directory entry: two parts, each below the
+    256 KiB threshold but above it together, spread like one file of
+    the same size would."""
+    from rc_scanner_spark.tables import _table_bytes, load_table
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    parts = [table / "part-00000.parquet", table / "part-00001.parquet"]
+    _write_documents(parts[0], 1500)
+    _write_documents(parts[1], 1500, start=1500)
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / ".part-00000.parquet.crc").write_bytes(b"x" * 64)
+    sizes = [p.stat().st_size for p in parts]
+    assert all(s < 256 << 10 for s in sizes) and sum(sizes) >= 256 << 10
+
+    assert _table_bytes(str(table)) == sum(sizes)
+    assert _table_bytes(str(parts[0])) == sizes[0]
+    with pytest.raises(OSError):
+        _table_bytes(str(tmp_path / "missing.parquet"))
+
+    df = load_table(spark, str(tmp_path), "documents")
+    assert _round_robin_spread(df)
+    assert df.count() == 3000
