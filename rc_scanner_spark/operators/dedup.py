@@ -17,61 +17,39 @@ Scale notes (the design target is ~100 TB of documents):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .text import normalize, words
 
-# DataFrame.persist registers with the JVM CacheManager, which holds a
-# strong reference — caches survive Python GC until an explicit
-# unpersist, so a long-lived session leaks them.  Operators that persist
-# intermediates register them here; ``release_caches()`` drops them all
-# (call it after consuming the returned frames — per-query results are
-# unaffected, only the cached *inputs* are released).  At 100 TB the
-# same role is played by an explicit parquet materialization of the
-# shingle table.
-_CACHED: list[DataFrame] = []
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
+# Persisted intermediates are recorded in Spark's CacheManager and
+# nowhere else.  It holds each one until it is dropped (Python GC does
+# not release them), so ``release_caches()`` empties it for the active
+# session: call it between queries, after their results are consumed.
+# The near-dup family (MinHash, SimHash, n-gram Jaccard) shares one
+# corpus tokenization, roughly a third of each query's cost, with no
+# memo on this side: a later query that builds the same persisted
+# frame finds it in the CacheManager, which swaps the cached copy into
+# its plan by result equality (an ``InMemoryTableScan``).  At 100 TB
+# the same role is played by an explicit parquet materialization of
+# the shingle table.
 
 
 def release_caches() -> None:
-    """Unpersist every intermediate this module has cached."""
-    while _CACHED:
-        _CACHED.pop().unpersist(blocking=False)
-    _SHARED_FRAMES.clear()
-
-
-# The near-dup family (MinHash, SimHash, n-gram Jaccard) all start
-# from the same corpus tokenization, which is roughly a third of each
-# query's cost: share the tokenized frame within a session the way a
-# production pipeline materializes the token table to parquet once and
-# fans every dedup algorithm out from it.  Keyed by the semantic hash
-# of the (id, text) projection, so different tables / sf_dirs never
-# collide; cleared by ``release_caches``.  Values are persisted
-# DataFrames (the word/shingle frames and the memoized ngram kept
-# buckets).
-_SHARED_FRAMES: dict[tuple, object] = {}
-
+    """Drop every cached frame of the active session."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.catalog.clearCache()
 
 
 def shared_word_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Persisted ``(id, ws: array<string>)`` tokenization of ``df``,
-    memoized per source plan — the one regex pass over the raw text
-    that every near-dup algorithm downstream shares."""
+    """Persisted ``(id, ws: array<string>)`` tokenization of ``df`` —
+    the one regex pass over the raw text that every near-dup algorithm
+    downstream shares."""
     proj = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    key = ("words", proj.semanticHash())
-    got = _SHARED_FRAMES.get(key)
-    if got is None:
-        got = _track_persist(proj.select("id", words(F.col("text")).alias("ws")))
-        _SHARED_FRAMES[key] = got
-    return got
+    return proj.select("id", words(F.col("text")).alias("ws")).persist()
 
 
 def shared_shingle_frame(
@@ -83,21 +61,11 @@ def shared_shingle_frame(
     """Persisted exploded ``(id, shingle: long)`` distinct hashed word
     k-gram frame, derived from ``shared_word_frame`` — shared by
     MinHash (signatures + verification) and blocked Jaccard."""
-    proj = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    key = ("shingles", k, proj.semanticHash())
-    got = _SHARED_FRAMES.get(key)
-    if got is None:
-        ws = shared_word_frame(df, id_col, text_col)
-        got = _track_persist(
-            ws.select(
-                "id",
-                F.explode(hashed_shingles_from_words(F.col("ws"), k)).alias(
-                    "shingle"
-                ),
-            )
-        )
-        _SHARED_FRAMES[key] = got
-    return got
+    ws = shared_word_frame(df, id_col, text_col)
+    return ws.select(
+        "id",
+        F.explode(hashed_shingles_from_words(F.col("ws"), k)).alias("shingle"),
+    ).persist()
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -241,16 +209,6 @@ def minhash_band_buckets(
     ).select("id", "bb.band", "bb.bucket")
 
 
-def signature_match_fraction(num_hashes: int) -> "Column":
-    """Estimated Jaccard between two joined signature sides aliased
-    ``n`` and ``o``: the fraction of agreeing MinHash components (the
-    standard unbiased estimator).  Null-safe per component."""
-    terms = " + ".join(
-        f"IF(n.h{i} <=> o.h{i}, 1, 0)" for i in range(num_hashes)
-    )
-    return F.expr(f"({terms}) / {num_hashes}.0")
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -278,11 +236,12 @@ def minhash_lsh_pairs(
     # The exploded shingle frame feeds three consumers here (signatures
     # and both sides of the verification join) and is SHARED with the
     # other near-dup algorithms in the session (shared_shingle_frame —
-    # persisted, memoized).  At 100 TB the same role is played by a
-    # checkpointed/parquet-materialized shingle table.  Shingles are
-    # born as 64-bit hashes: no string materialization at all, every
-    # downstream shuffle/join moves 8 bytes, and Jaccard over hashed
-    # shingles equals Jaccard over strings up to 2^-64 collisions.
+    # persisted, so the CacheManager serves it to later queries).  At
+    # 100 TB the same role is played by a checkpointed/parquet-
+    # materialized shingle table.  Shingles are born as 64-bit hashes:
+    # no string materialization at all, every downstream shuffle/join
+    # moves 8 bytes, and Jaccard over hashed shingles equals Jaccard
+    # over strings up to 2^-64 collisions.
     sh = shared_shingle_frame(df, id_col, text_col, shingle_k)
 
     # The 128 per-seed mins and the band structs are built as SQL
@@ -295,15 +254,13 @@ def minhash_lsh_pairs(
     # 128-min aggregate (~2 s CPU x 8 AQE stages at sf0.1).  5000 rows
     # x 129 longs here; at 100 TB the signature table is the thing you
     # materialize to parquet anyway.
-    sig = _track_persist(
-        sh.groupBy("id").agg(
-            F.count(F.lit(1)).alias("n_sh"),
-            *[
-                F.expr(f"min(xxhash64({seed}L, shingle)) AS h{seed}")
-                for seed in range(num_hashes)
-            ],
-        )
-    )
+    sig = sh.groupBy("id").agg(
+        F.count(F.lit(1)).alias("n_sh"),
+        *[
+            F.expr(f"min(xxhash64({seed}L, shingle)) AS h{seed}")
+            for seed in range(num_hashes)
+        ],
+    ).persist()
     band_structs = ", ".join(
         "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
             b=b,
@@ -485,10 +442,11 @@ def ngram_jaccard_pairs(
     # buffer in one task (review r8 round 7).  The count aggregate
     # carries constant state; the collect then runs only over
     # cap-bounded buckets.
-    # Persist + memoize the df frame: the hot filter (counts side),
-    # the pair-bucket filter (pairs side), and the registry's second
-    # consumer (graph_degree_stats re-calls this builder) all read it;
-    # it is one narrow row per (block, shingle).  Memoizing dfc —
+    # Persist the df frame: the hot filter (counts side), the
+    # pair-bucket filter (pairs side), and the registry's second
+    # consumer (graph_degree_stats re-calls this builder, and finds the
+    # cached copy in the CacheManager) all read it; it is one narrow
+    # row per (block, shingle).  Caching dfc —
     # instead of the pre-r12 materialized kept frame — lets both
     # consumers below stay df-GATED: the old kept collect_list built
     # id arrays for EVERY surviving bucket, but ~94% of buckets are
@@ -496,20 +454,9 @@ def ngram_jaccard_pairs(
     # never produce a pair, so the array build paid 16x more
     # aggregation state than the pair explode ever read (r11 brief #2;
     # measured 2.6 s -> 1.2 s warm).
-    dfc_key = (
-        "ngram_dfc",
-        shingle_k,
-        tuple(group_cols),
-        sh.semanticHash(),
-    )
-    dfc = _SHARED_FRAMES.get(dfc_key)
-    if dfc is None:
-        dfc = _track_persist(
-            sh.groupBy(*group_cols, "shingle").agg(
-                F.count(F.lit(1)).alias("df")
-            )
-        )
-        _SHARED_FRAMES[dfc_key] = dfc
+    dfc = sh.groupBy(*group_cols, "shingle").agg(
+        F.count(F.lit(1)).alias("df")
+    ).persist()
     # The HOT complement (df > cap) is tiny by construction (at most
     # total-occurrences/cap rows; in practice a handful of boilerplate
     # shingles), so the df filter is an anti-join whose build side AQE
@@ -810,7 +757,7 @@ def simhash_pairs(
     # Both sides of the chunk self-join consume the signature frame;
     # persist it so the 64-vote aggregate runs once (same rationale as
     # the MinHash signature persist).
-    base = _track_persist(simhash_signatures(df, id_col, text_col))
+    base = simhash_signatures(df, id_col, text_col).persist()
     # SQL-string construction (selectExpr / one F.expr join condition)
     # for the same py4j-round-trip reason as simhash_signatures.
     chunk_structs = ", ".join(f"struct({c} AS chunk, sh[{c}] AS val)" for c in range(4))
@@ -881,13 +828,13 @@ def prefix_jaccard_pairs(
     # rank join, and both sides of the verification join); without a
     # persist each consumer re-runs tokenize+explode over the corpus —
     # profiled r14 at sf0.1 as four ~6.5 s-CPU stages of the same
-    # subtree.  Same _track_persist discipline as the ngram/minhash
-    # operators (released by release_caches; never crosses a bench
-    # sample).  The width-pinned repartition of the RAW doc rows (a
+    # subtree.  Same persist discipline as the ngram/minhash operators
+    # (released by release_caches; never crosses a bench sample).  The
+    # width-pinned repartition of the RAW doc rows (a
     # few MB) runs the tokenize CPU (~7 s at sf0.1) at full session
     # parallelism instead of the scan's spread width, and sets the
     # cached frame's width so AQE cannot serialize its consumers.
-    tok = _track_persist(
+    tok = (
         df.repartition(
             df.sparkSession.sparkContext.defaultParallelism, id_col
         )
@@ -895,6 +842,7 @@ def prefix_jaccard_pairs(
             F.col(id_col).alias("id"),
             F.explode(word_shingles(F.col(text_col), shingle_k)).alias("tok"),
         )
+        .persist()
     )
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ranked = tok.join(dfreq, "tok")
@@ -1048,15 +996,17 @@ def minhash_lsh_pairs_portable(
     # pair routing, so the old LEFT join + two count joins were
     # identities.  The entry repartition runs the hash CPU at session
     # width instead of the scan's spread width.
-    sh = _track_persist(
+    sh = (
         df.repartition(
             df.sparkSession.sparkContext.defaultParallelism, id_col
-        ).select(
+        )
+        .select(
             F.col(id_col).alias("id"),
             F.explode(word_shingles(F.col(text_col), shingle_k)).alias(
                 "shingle"
             ),
         )
+        .persist()
     )
     sig = sh.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_sh"),

@@ -83,33 +83,6 @@ def connected_components(
         .select("id", F.col("id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    # r15: the loop runs under an AQE-off conf scope.  Every round's
-    # frames are checkpointed KB..MB-scale (id, component) pairs whose
-    # size AQE re-learns each round at the cost of per-exchange
-    # materialization jobs and driver re-plans (~5 jobs/round on
-    # dedup_keep_best); skew is bounded by construction (the edge
-    # builder caps group size, so node degree is capped), which is the
-    # one thing AQE would buy here.  Shuffle width inside the scope
-    # follows the checkpointed edge frame's own partition count — a
-    # data-adaptive stand-in for the coalescing AQE would have done:
-    # small locally, proportionally wide at cluster scale.  The scope
-    # restores both confs even on error (tests/test_graph.py pins the
-    # restore).
-    spark = edges.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    loop_width = max(sym.rdd.getNumPartitions(), 2)
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-        labels = _cc_loop(sym, labels, max_iters)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return labels
-
-
-def _cc_loop(sym: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
     for _ in range(max_iters):
         # One join + one aggregation per round (r15; was two joins).
         # The old shape aggregated neighbor labels per node and LEFT

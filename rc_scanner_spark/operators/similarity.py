@@ -264,9 +264,8 @@ def _verify_candidate_pairs(sigs: DataFrame, threshold: float) -> DataFrame:
     per operand), so results are unchanged while per-pair fold work
     drops from 3 array passes to 1."""
     from ..functions.vectors import dot, norm
-    from .dedup import _track_persist
 
-    sigs = _track_persist(sigs.withColumn("nv", norm(F.col("v"))))
+    sigs = sigs.withColumn("nv", norm(F.col("v"))).persist()
     l, r = sigs.alias("l"), sigs.alias("r")
     denom = F.col("na") * F.col("nb")
     return (
@@ -509,15 +508,15 @@ def semantic_dedup(
       salt is a function of id_hi), so the pair set is unchanged.
     """
     from ..functions.vectors import dot, norm
-    from .dedup import _track_persist
 
     nsalts = _SEMDEDUP_SALTS
     width = vectors.sparkSession.sparkContext.defaultParallelism
     _, assigned = kmeans_refine(vectors, num_cells, iters, id_col, vec_col)
-    assigned = _track_persist(
+    assigned = (
         assigned.withColumn("nv", norm(F.col("v"))).repartition(
             width, "cell"
         )
+        .persist()
     )
     a = assigned.select(
         "cell",
@@ -599,7 +598,6 @@ def kmeans_refine(
         .limit(num_cells)
         .select((F.row_number().over(w_seed) - 1).alias("cell"), F.col("v").alias("cv"))
     )
-    from .dedup import _track_persist
 
     for _ in range(iters):
         assigned = kmeans_assign(base, centroids)
@@ -613,7 +611,7 @@ def kmeans_refine(
         # SQL strings (same literals/casts/shapes as the old Column
         # chain — 1e6 spelled as the DOUBLE literal the Column form
         # produced) to cut per-iteration py4j plan-construction cost.
-        centroids = _track_persist(
+        centroids = (
             assigned.selectExpr("cell", "posexplode(v) AS (pos, val)")
             .groupBy("cell", "pos")
             .agg(
@@ -630,6 +628,7 @@ def kmeans_refine(
                     " x -> x.val) AS cv"
                 )
             )
+            .persist()
         )
     return centroids, kmeans_assign(base, centroids)
 

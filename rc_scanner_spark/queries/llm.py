@@ -2752,7 +2752,7 @@ def q_dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same plan shape as the pair generation (string shingles retained
     here because they ARE the output); the explanation adds one
     ``collect_set`` bounded at 3 surviving examples per pair."""
-    from ..operators.dedup import _track_persist, word_shingles
+    from ..operators.dedup import word_shingles
 
     d = _t(spark, sf_dir, "documents")
     # r14: tokenize once at session width — ``e`` feeds the df count
@@ -2761,7 +2761,7 @@ def q_dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluated ~5x (the dedup_containment profile pattern).  The
     # kept cache is pinned hash(lang, source, shingle) so the pair
     # self-join reads co-partitioned cache with zero exchanges.
-    e = _track_persist(
+    e = (
         d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "lang",
@@ -2769,11 +2769,12 @@ def q_dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("id"),
             F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
         )
+        .persist()
     )
     dfreq = e.groupBy("lang", "source", "shingle").agg(
         F.count(F.lit(1)).alias("df")
     )
-    kept = _track_persist(
+    kept = (
         e.join(
             dfreq.filter(F.col("df") <= 50), ["lang", "source", "shingle"]
         ).repartition(
@@ -2782,6 +2783,7 @@ def q_dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "shingle",
         )
+        .persist()
     )
     counts = kept.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = kept.select("lang", "source", "shingle", F.col("id").alias("id_a"))

@@ -707,7 +707,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.size(ws) > 0, F.array(F.concat_ws(" ", ws)))
         .otherwise(F.array().cast("array<string>")),
     )
-    from ..operators import dedup as _dedup
 
     # r14: tokenize once, at full width.  ``e`` feeds the df count AND
     # the df-cap join; un-persisted, both consumers re-ran the shingle
@@ -720,9 +719,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     ).select("doc_id", sh.alias("sh"))
-    e = _dedup._track_persist(
-        s.select("doc_id", F.explode("sh").alias("tok"))
-    )
+    e = s.select("doc_id", F.explode("sh").alias("tok")).persist()
     df_ok = e.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= _CONT_DF_CAP
     )
@@ -730,10 +727,11 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width: the a/b self-join below keys on tok, so both sides read
     # the SAME co-partitioned cache and the join plans with zero
     # exchanges (and AQE cannot serialize it).
-    eb = _dedup._track_persist(
+    eb = (
         e.join(df_ok.select("tok"), "tok").repartition(
             spark.sparkContext.defaultParallelism, "tok"
         )
+        .persist()
     )
     na_f = eb.groupBy("doc_id").agg(F.count(F.lit(1)).alias("na"))
     a = eb.select(F.col("doc_id").alias("id_a"), "tok")

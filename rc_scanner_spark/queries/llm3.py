@@ -80,9 +80,8 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("w"),
     ).select("doc_id", F.col("w.start").alias("start"), F.col("w.key").alias("key"))
-    from ..operators import dedup as _dedup
 
-    win = _dedup._track_persist(win)  # read by dup_keys AND dup_win
+    win = win.persist()  # read by dup_keys AND dup_win
     dup_keys = (
         win.groupBy("key")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -339,9 +338,8 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from ..operators import dedup as _dedup
 
-    sk = _dedup._track_persist(sk)  # read by sizes and both join sides
+    sk = sk.persist()  # read by sizes and both join sides
     sizes = sk.groupBy("source").agg(F.count(F.lit(1)).alias("n_keys"))
     a = sk.alias("a")
     b = sk.alias("b")
@@ -960,10 +958,9 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     from .llm import q_ann_cosine_topk, q_ann_ivf_topk
 
-    from ..operators import dedup as _dedup
-
-    brute = _dedup._track_persist(
+    brute = (
         q_ann_cosine_topk(spark, sf_dir).select("query_id", "vec_id")
+        .persist()
     )  # read by the hits join AND the per-query k groupBy
     ivf = q_ann_ivf_topk(spark, sf_dir).select("query_id", "vec_id")
     hits = brute.join(ivf, ["query_id", "vec_id"]).groupBy("query_id").agg(

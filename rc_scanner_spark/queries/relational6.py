@@ -452,14 +452,14 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer aggregates; the z/tau floats are one scalar
     chain per group evaluated in the identical literal order on both
     engines (bit-identical).  The spine frame feeds four consumers —
-    persisted via the tracked-persist contract."""
-    from ..operators.dedup import _track_persist
+    persisted (released by release_caches)."""
     from .warehouse2 import filled_day_spine
 
-    filled = _track_persist(
+    filled = (
         filled_day_spine(spark, sf_dir).select(
             "event_type", "day", F.col("cnt").cast("long").alias("cnt")
         )
+        .persist()
     )
     a = filled.select(
         "event_type", F.col("day").alias("da"), F.col("cnt").alias("ca")

@@ -226,24 +226,23 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("t").alias("src"), F.col("u").alias("dst"))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Tracked persist: the returned DataFrame is lazy, so an unpersist
-    # in a finally block would drop the cache BEFORE the caller's
-    # first action ever materializes it (the cache would never help).
-    # The harnesses release tracked caches after consuming the result
-    # (bench per group, check_oracle per query).
-    from ..operators import dedup as _dedup
-
-    edges = _dedup._track_persist(edges.join(deg, "src").repartition("src"))
+    # Plain persist, no unpersist: the returned DataFrame is lazy, so
+    # an unpersist in a finally block would drop the cache BEFORE the
+    # caller's first action ever materializes it (the cache would never
+    # help).  The harnesses empty the session's cache after consuming
+    # the result (bench per group, check_oracle per query).
+    edges = edges.join(deg, "src").repartition("src").persist()
     # r14 batch 8: nodes is consumed by the init ranks AND every
     # iteration's left join — un-persisted, each round re-ran the
     # distinct (an exchange per round).  Cached hash(node)-partitioned
     # at session width so the per-round join side needs no exchange
     # and no re-evaluation.  Cache/partitioning only — row set
     # unchanged.
-    nodes = _dedup._track_persist(
+    nodes = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "node")
+        .persist()
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
@@ -374,15 +373,14 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = spark.createDataFrame(list(_BM25_QUERIES), ["query_id", "term"])
     term_arr = F.array(*[F.lit(t) for t in sorted({t for _, t in _BM25_QUERIES})])
 
-    # Tracked persist (see q_graph_pagerank note: a finally-unpersist
-    # on a lazily-returned frame never lets the cache materialize).
-    from ..operators import dedup as _dedup
-
-    words = _dedup._track_persist(
+    # Persisted (see q_graph_pagerank note: a finally-unpersist on a
+    # lazily-returned frame never lets the cache materialize).
+    words = (
         d.select(
             "doc_id",
             F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias("ws"),
         )
+        .persist()
     )
     dl = words.select("doc_id", F.size("ws").alias("dl"))
     globals_ = dl.agg(
@@ -672,7 +670,6 @@ def capped_baskets(spark: SparkSession, sf_dir: str, max_order: int):
     (all distinct (order, part) rows, the subset restricted to
     baskets with <= max_order distinct parts).  One definition of
     the capping rule instead of a copy per query."""
-    from ..operators.dedup import _track_persist
 
     # r14: ONE width-pinned exchange by order key up front makes the
     # whole chain exchange-free: hash(l_orderkey) co-locates every
@@ -685,13 +682,14 @@ def capped_baskets(spark: SparkSession, sf_dir: str, max_order: int):
     # are persisted: the basket family's queries consume li2 3-4
     # times (pair sides, marginals, totals), each un-cached read
     # re-ran the scan+distinct.
-    li = _track_persist(
+    li = (
         _t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(
             spark.sparkContext.defaultParallelism, "l_orderkey"
         )
         .distinct()
+        .persist()
     )
     ok = (
         li.groupBy("l_orderkey")
@@ -699,7 +697,7 @@ def capped_baskets(spark: SparkSession, sf_dir: str, max_order: int):
         .filter(F.col("sz") <= max_order)
         .select("l_orderkey")
     )
-    return li, _track_persist(li.join(ok, "l_orderkey"))
+    return li, li.join(ok, "l_orderkey").persist()
 
 
 def basket_cte_sql(max_order: int) -> str:

@@ -62,13 +62,12 @@ def q_graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket frame (shared builder with the market-basket family);
     integer-exact (no normalization -> no float accumulation-order
     surface); top-k plans as TakeOrderedAndProject."""
-    from ..operators.dedup import _track_persist
 
     _li, li2 = capped_baskets(spark, sf_dir, _HITS_MAX_ORDER)
     # li2 feeds three consumers (a1 scan, h1 join, a2 join) — persist
-    # (tracked, released by bench/check_oracle) instead of rebuilding
+    # (released by bench/check_oracle) instead of rebuilding
     # the distinct+cap frame three times
-    li2 = _track_persist(li2)
+    li2 = li2.persist()
     a1 = li2.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("a1"))
     h1 = (
         li2.join(a1, "l_partkey")

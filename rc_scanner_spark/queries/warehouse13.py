@@ -61,7 +61,6 @@ def q_llm_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_ok",
         F.when(F.col("lang").isin(*_V2_LANGS), 1).otherwise(0),
     )
-    from ..operators.dedup import _track_persist
 
     wdup = Window.partitionBy("th").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -78,11 +77,11 @@ def q_llm_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int"),
     )
     # surv feeds the dedup count + the sample; sampled feeds the
-    # sample count + the shard count — persist both (tracked,
-    # released by bench/check_oracle) so the documents scan and the
+    # sample count + the shard count — persist both (released
+    # by bench/check_oracle) so the documents scan and the
     # md5 window run once, not ~4x across the funnel legs
     # (review-round fix, r6)
-    surv = _track_persist(surv)
+    surv = surv.persist()
     u = (
         F.conv(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
@@ -100,7 +99,7 @@ def q_llm_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("es_key_nano"), "doc_id")
         .limit(_V2_SAMPLE_K)
     )
-    sampled = _track_persist(sampled)
+    sampled = sampled.persist()
     wsh = (
         Window.partitionBy("source")
         .orderBy("doc_id")

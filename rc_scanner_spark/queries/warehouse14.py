@@ -57,17 +57,16 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     set.  Integer milli end-to-end."""
     from ..operators.dedup import (
         _portable_hash64,
-        _track_persist,
         word_shingles,
     )
 
     # shared builders: word_shingles is the verified k-gram idiom the
     # whole MinHash family uses; _portable_hash64 the md5-60bit twin.
     # sh feeds sig + both sides of the exact-intersection join and
-    # sig feeds both pair sides — persist both (tracked, released by
+    # sig feeds both pair sides — persist both (released by
     # bench/check_oracle) instead of re-running the shingle explode
     # 3x and the 16-min aggregate 2x.
-    sh = _track_persist(
+    sh = (
         _t(spark, sf_dir, "documents")
         .select(
             "doc_id",
@@ -79,13 +78,14 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             _portable_hash64(F.col("doc_id").cast("string")) % _MA_BUCKETS,
         )
+        .persist()
     )
     # r14 batch 7: the 16 md5-min aggregates and the 16-term match
     # sum are SQL expression strings (same md5/conv/concat_ws chains
     # the Column forms parsed — the _portable_hash64 definition —
     # so every signature long is unchanged); cuts ~300 py4j calls of
     # driver plan construction per build.
-    sig = _track_persist(
+    sig = (
         sh.groupBy("doc_id", "bucket").agg(
             F.count(F.lit(1)).alias("n_sh"),
             *[
@@ -97,6 +97,7 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for s in range(_MA_PERMS)
             ],
         )
+        .persist()
     )
     a, b = sig.alias("a"), sig.alias("b")
     matches = F.expr(

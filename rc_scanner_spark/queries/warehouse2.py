@@ -408,10 +408,9 @@ _TRI_MIN_SUPPORT = 2  # edge = pair co-occurring in >= 2 orders
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-pruned oriented co-purchase edge frame (pa < pb),
-    shared by triangle counting and link prediction.  Persisted via
-    the dedup module's tracked-cache mechanism so long-lived sessions
-    can release it (operators/dedup.release_caches)."""
-    from ..operators import dedup as _dedup
+    shared by triangle counting and link prediction.  Persisted; a
+    long-lived session releases it with operators/dedup.release_caches
+    (Spark's cache manager is the only record of it)."""
 
     # r14: one width-pinned exchange by order key up front; hash on
     # l_orderkey satisfies the clustering needs of the (order, part)
@@ -447,7 +446,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s") >= _TRI_MIN_SUPPORT)
         .select("pa", "pb")
     )
-    return _dedup._track_persist(edges)
+    return edges.persist()
 
 
 _SQL_EDGES_CTE = f"""li AS (
@@ -476,7 +475,7 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set BEFORE the two triangle joins (the same basket hygiene
     as basket_part_pairs); orientation (pa < pb) makes each join a
     plain equi-join with no duplicate enumeration to dedup after.
-    The edge frame is persisted (tracked — release via
+    The edge frame is persisted (released by
     operators/dedup.release_caches) because the enumeration references
     it three times; AQE exchange reuse is not guaranteed across
     differently-keyed consumers."""
@@ -1184,9 +1183,8 @@ def q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m_end"),
         )
     )
-    from ..operators import dedup as _dedup
 
-    starts = _dedup._track_persist(starts)  # two delta arms read it
+    starts = starts.persist()  # two delta arms read it
     deltas = starts.select(
         F.col("m_start").alias("m"), F.lit(1).alias("d")
     ).unionAll(
@@ -1211,7 +1209,7 @@ def q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("d").alias("delta"))
         .select("m", F.to_date("m").alias("day"), "delta")
     )
-    per_min = _dedup._track_persist(per_min)  # window + day totals
+    per_min = per_min.persist()  # window + day totals
     w_in_day = (
         W.partitionBy("day")
         .orderBy("m")
@@ -1427,16 +1425,15 @@ def q_events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (type x hours) frame."""
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import _track_persist
-
     ev = _t(spark, sf_dir, "events")
     # the hourly rollup feeds four lazy consumers (ranked + join-left,
-    # twice through the double disc-median pass) — persist (tracked)
+    # twice through the double disc-median pass) — persist it
     # so the raw events scan runs once (review r8 round 6)
-    hourly = _track_persist(
+    hourly = (
         ev.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("h")
         ).agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
     )
 
     def disc_median(df, part, col, out):

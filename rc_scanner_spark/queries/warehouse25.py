@@ -378,10 +378,8 @@ def q_stats_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # variant rows (sums are associative) — avoids duplicating the
     # events-scan subtree into a second aggregation path.  The 2-row
     # variant frame is multi-consumer (pooled fold + final readout),
-    # so it is _track_persist'ed per repo convention — the lazy plan
+    # so it is persisted per repo convention — the lazy plan
     # otherwise re-derives the whole events scan per consumer.
-    from ..operators.dedup import _track_persist
-
     # Operand-cast BEFORE multiplying (the stats_spearman convention):
     # casting the long*long *product* still evaluates the multiply in
     # 64-bit and throws under ANSI once a per-user half-period spend
@@ -395,7 +393,7 @@ def q_stats_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("y").cast(dec) * F.col("y").cast(dec)).alias("vsyy"),
         F.sum(F.col("x").cast(dec) * F.col("y").cast(dec)).alias("vsxy"),
     )
-    per_variant = _track_persist(per_variant)
+    per_variant = per_variant.persist()
     pooled = per_variant.agg(
         F.sum("n_users").alias("n"),
         F.sum("vsx").alias("sx"),

@@ -259,17 +259,17 @@ def q_text_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle level (count per min_doc IS the novelty count);
     deciles come from a 1-row min/max id broadcast, not a rank
     window."""
-    from ..operators.dedup import _track_persist
 
     # r14: the shingle projection fed THREE un-cached consumers (the
     # per-doc sizes, the span scalar via per_doc, and the first-
     # occurrence explode) — profiled as two 6-13 s-CPU stages of the
     # same tokenize at sf0.1.  Persist it once, computed at session
     # width (entry repartition of the raw doc rows).
-    d = _track_persist(
+    d = (
         _t(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", word_shingles(F.col("text")).alias("sh"))
+        .persist()
     )
     per_doc = d.select("doc_id", F.size("sh").alias("n_sh"))
     firsts = (

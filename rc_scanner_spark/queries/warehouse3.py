@@ -687,14 +687,13 @@ def q_sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one broadcast of a 1-row center frame + a
     distributed TakeOrderedAndProject argmax — k rounds, k broadcast
     cartesians (pinned), never a point-to-point pair join.  Each
-    round's distance frame is persisted (tracked — released via
+    round's distance frame is persisted (released by
     operators/dedup.release_caches) because the next center pick AND
     the next round both consume it; without the persist every unrolled
     subtree re-scans and re-computes all prior rounds (~4x the work,
     15 cartesian nodes instead of 4).  All distances 4-dec rounded so
     the argmax ordering replays exactly in the oracle."""
     from ..functions.vectors import cosine
-    from ..operators.dedup import _track_persist
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
@@ -704,30 +703,33 @@ def q_sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = e.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("c1_id"), F.col("embedding").alias("c1v")
     )
-    d1 = _track_persist(
+    d1 = (
         e.crossJoin(F.broadcast(c1)).select(
             "vec_id", "embedding", "c1_id", dist(F.col("c1v")).alias("dm1")
         )
+        .persist()
     )
     c2 = d1.orderBy(F.col("dm1").desc(), F.col("vec_id").asc()).limit(1).select(
         F.col("vec_id").alias("c2_id"), F.col("embedding").alias("c2v")
     )
-    d2 = _track_persist(
+    d2 = (
         d1.crossJoin(F.broadcast(c2)).select(
             "vec_id", "embedding", "c1_id", "c2_id",
             "dm1",
             dist(F.col("c2v")).alias("d2"),
         ).withColumn("dm2", F.least("dm1", "d2"))
+        .persist()
     )
     c3 = d2.orderBy(F.col("dm2").desc(), F.col("vec_id").asc()).limit(1).select(
         F.col("vec_id").alias("c3_id"), F.col("embedding").alias("c3v")
     )
-    d3 = _track_persist(
+    d3 = (
         d2.crossJoin(F.broadcast(c3)).select(
             "vec_id", "embedding", "c1_id", "c2_id", "c3_id",
             "dm1", "d2", "dm2",
             dist(F.col("c3v")).alias("d3"),
         ).withColumn("dm3", F.least("dm2", "d3"))
+        .persist()
     )
     c4 = d3.orderBy(F.col("dm3").desc(), F.col("vec_id").asc()).limit(1).select(
         F.col("vec_id").alias("c4_id"), F.col("embedding").alias("c4v")
@@ -979,12 +981,10 @@ def q_dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("wq"),
     )
     # weighted feeds FOUR differently-keyed consumers (norms, posts,
-    # both dot sides) — persist (tracked), or the lazy plan re-derives
+    # both dot sides) — persist, or the lazy plan re-derives
     # tokenize -> tf -> df-join per consumer (the graph_kcore
     # multiplier class; review r8 round 6)
-    from ..operators.dedup import _track_persist
-
-    weighted = _track_persist(weighted)
+    weighted = weighted.persist()
     # decimal-exact sums of squared weights: wq can reach ~2e10 on
     # pathological corpora, so a long wq*wq wraps — Spark ANSI throws
     # AND DuckDB overflow-throws on the BIGINT per-row product (only
@@ -1697,11 +1697,9 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # fps (the expensive map-side md5 + window-minimum chain) feeds
     # three consumers (df_ build + the posts frame under both
-    # self-join sides) — persist (tracked) so the fingerprint HOFs
+    # self-join sides) — persist so the fingerprint HOFs
     # run once over the corpus (review r8 round 6)
-    from ..operators.dedup import _track_persist
-
-    fps = _track_persist(fps)
+    fps = fps.persist()
     df_ = fps.groupBy("lang", "fp").agg(F.count(F.lit(1)).alias("df"))
     posts = fps.join(df_.filter(F.col("df") <= 50), ["lang", "fp"]).select(
         "lang", "fp", F.col("doc_id").alias("id")

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
-from ..operators import dedup as _dedup
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -925,10 +924,11 @@ def q_orders_next_order_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("nxt"), F.array(F.lit(-1)))
         ).alias("part_next"),
     )
-    pair_full = _dedup._track_persist(
+    pair_full = (
         pairs.groupBy("part_prev", "part_next").agg(
             F.count(F.lit(1)).alias("n_pair")
         )
+        .persist()
     )
     n_prev = pair_full.filter(F.col("part_next") == -1).select(
         "part_prev", F.col("n_pair").alias("n_prev")

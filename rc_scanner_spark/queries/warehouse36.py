@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
-from ..operators import dedup as _dedup
 from . import QuerySpec, load_tuned
 from .warehouse28 import _US_PER_DAY
 

@@ -820,9 +820,8 @@ def q_stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: per_bin (bounded by types x value-domain bins) feeds
     # BOTH the per-type totals and the term join — without the cache
     # each consumer re-runs the corpus aggregation
-    from ..operators import dedup as _dedup
 
-    per_bin = _dedup._track_persist(
+    per_bin = (
         halves.groupBy("event_type", "bin").agg(
             F.sum(
                 F.when(F.col("us") <= F.col("mid_us"), 1).otherwise(0)
@@ -831,6 +830,7 @@ def q_stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("us") > F.col("mid_us"), 1).otherwise(0)
             ).alias("npost"),
         )
+        .persist()
     )
     tot = per_bin.groupBy("event_type").agg(
         F.sum("npre").alias("tpre"),

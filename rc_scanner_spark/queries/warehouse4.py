@@ -754,7 +754,6 @@ def q_graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-community reduction never touches a float.  Scale: the label
     frame joins the shared pruned edge list twice (both shuffles hash
     on the node key); the 1-row m scalar broadcasts."""
-    from ..operators.dedup import _track_persist
     from .warehouse2 import _copurchase_edges
 
     edges = _copurchase_edges(spark, sf_dir).select("pa", "pb")
@@ -763,7 +762,7 @@ def q_graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup): persist per repo convention, or the lazy plan
     # replicates the 6-shuffle LPA sweep under each (review r10; the
     # graph_kcore precedent)
-    labels = _track_persist(_lpa_labels(spark, sf_dir, und))
+    labels = _lpa_labels(spark, sf_dir, und).persist()
     mm = edges.agg(F.count(F.lit(1)).alias("m"))
     la = labels.select(F.col("u").alias("pa"), F.col("lbl").alias("ca"))
     lb = labels.select(F.col("u").alias("pb"), F.col("lbl").alias("cb"))
@@ -1047,14 +1046,13 @@ def q_embed_pair_distance_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" * CAST(element_at(embedding, {i + 1}) AS DOUBLE)"
         for i in range(_JL_IN_DIM)
     )
-    from ..operators.dedup import _track_persist
 
     # r14: persist the bucketed/normed frame (both self-join sides
     # re-ran the 64-term norm chain) and pin its width on the bucket
     # key: the join keys on 64 buckets, so both sides read the same
     # co-partitioned cache (no exchange) and AQE byte-coalescing
     # cannot serialize the (N/B)^2-pair cosine CPU onto one task.
-    v = _track_persist(
+    v = (
         _t(spark, sf_dir, "embeddings")
         .selectExpr(
             "vec_id",
@@ -1065,6 +1063,7 @@ def q_embed_pair_distance_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("nrm") > 0)
         .repartition(spark.sparkContext.defaultParallelism, "bucket")
+        .persist()
     )
     a = v.alias("a")
     b = v.alias("b")

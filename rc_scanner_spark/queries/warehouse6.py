@@ -339,11 +339,9 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST vocabulary — the corpus side never shuffles for the
     join, and the final rollup partitions by doc_id.  The exploded
     stream feeds BOTH the vocab build and the scoring join, so it is
-    persisted through the tracked-cache mechanism (released by
-    bench/check_oracle) instead of tokenizing the corpus twice."""
-    from ..operators.dedup import _track_persist
+    persisted (released by bench/check_oracle) instead of tokenizing the corpus twice."""
 
-    docs = _track_persist(
+    docs = (
         _t(spark, sf_dir, "documents").select(
             "doc_id",
             F.explode(
@@ -353,6 +351,7 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("tok"),
         )
+        .persist()
     )
     vocab = (
         docs.groupBy("tok")

@@ -246,12 +246,11 @@ def q_text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the token total is a broadcast scalar; top-k plans as
     TakeOrderedAndProject.  The ln argument builds double-first
     (c_ab * T as a bigint product would pass 2^63 at design scale)."""
-    from ..operators.dedup import _track_persist
 
     # the token-array frame feeds both the unigram aggregate and the
-    # bigram explode — persist it (tracked, released by bench/
+    # bigram explode — persist it (released by bench/
     # check_oracle) instead of tokenizing the corpus twice
-    toks_arr = _track_persist(
+    toks_arr = (
         _t(spark, sf_dir, "documents").select(
             "doc_id",
             F.filter(
@@ -259,6 +258,7 @@ def q_text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: x != F.lit(""),
             ).alias("t"),
         )
+        .persist()
     )
     cnt = (
         toks_arr.select(F.explode("t").alias("tok"))

@@ -1,6 +1,6 @@
 """Parquet table loaders for the driver-generated test data.
 
-Tables documented in /root/repo/FIXTURES.md §B.  Loading is a plain
+Tables documented in FIXTURES.md §B (repo root).  Loading is a plain
 ``spark.read.parquet`` so Catalyst gets full predicate pushdown,
 column pruning and (on a partitioned lake) partition pruning for free
 — the reference's hand-rolled "source pruning" (filter_.py:104-108)
@@ -188,28 +188,14 @@ def _parse_bytes(v: str) -> int:
     return int(v[:i]) * _BYTE_UNITS[v[i:]]
 
 
-# Schema cache per (session JVM, path): a plain spark.read.parquet
-# infers the schema from footers on EVERY call (~75-100 ms/table —
-# tpch_q5ish loads six tables, so repeated plan construction paid
-# ~0.5 s/query in pure re-inference).  Supplying the cached schema
-# skips inference while file LISTING still happens per plan, so newly
-# written files under the same path are picked up.  Entries carry a
-# directory stamp: an overwrite (Spark rewrites the dir contents)
-# changes it and the schema re-infers on the next load — no writer has
-# to remember to call invalidate_schema_cache() (writers outside
-# tests/conftest.write_fixture never did).  Paths where stat fails
-# (non-local FS) fall back to stamp=None, i.e. cache-by-path-only.
-_SCHEMA_CACHE: dict[tuple[int, str], tuple[object, object]] = {}
-
-
 def _path_stamp(path: str) -> object:
-    """Invalidation stamp for a parquet directory: the dir mtime_ns
-    plus each entry's (name, size, mtime_ns).  The dir mtime alone has
-    1-second granularity on some filesystems, so two overwrites inside
-    the same second (back-to-back fixture writes) could collide; the
-    per-file listing makes the stamp content-sensitive at the cost of
-    one readdir+stat sweep per load (a parquet dir holds a handful of
-    entries).  A rewrite that reproduces byte-identical sizes AND
+    """Invalidation stamp for a parquet directory (``_DF_CACHE``): the
+    dir mtime_ns plus each entry's (name, size, mtime_ns).  The dir
+    mtime alone has 1-second granularity on some filesystems, so two
+    overwrites inside the same second (back-to-back fixture writes)
+    could collide; the per-file listing makes the stamp
+    content-sensitive at the cost of one readdir+stat sweep per load
+    (a parquet dir holds a handful of entries).  A rewrite that reproduces byte-identical sizes AND
     mtime_ns for every part file is indistinguishable — and also
     schema-identical in practice."""
     try:
@@ -235,29 +221,29 @@ def _path_stamp(path: str) -> object:
 
 
 def invalidate_schema_cache(path: str | None = None) -> None:
-    """Drop cached schemas and loaded frames (for `path`, or all)."""
-    for cache in (_SCHEMA_CACHE, _DF_CACHE):
-        if path is None:
-            cache.clear()
-            continue
-        for key in [k for k in cache if k[1] == path]:
-            del cache[key]
+    """Drop loaded frames (for `path`, or all) so the next load
+    re-infers the schema."""
+    if path is None:
+        _DF_CACHE.clear()
+        return
+    for key in [k for k in _DF_CACHE if k[1] == path]:
+        del _DF_CACHE[key]
 
 
-# Loaded-frame memo per (session JVM, path) — the level above the
-# schema cache.  Even with the schema supplied, every load_table call
-# still paid DataSource resolution + file listing + the _spread size
-# checks + _normalize_timestamps' dtypes-triggered analysis: measured
-# 12-28 ms/table warm (r15), recurring for every one of the several
-# hundred table loads in a registry sweep and on every bench sample's
-# plan rebuild.  A DataFrame is an immutable plan handle — reusing the
-# object across queries holds NO data (execution still scans parquet;
-# persisted/derived frames are tracked elsewhere), exactly like the
-# per-query shared-frame memos in operators/dedup.py.  Entries carry
-# the same directory stamp as the schema cache plus every session input
-# the _spread decision reads (maxPartitionBytes, parallelism),
-# so a fixture overwrite or a re-configured session re-loads instead
-# of serving a stale plan.
+# Loaded-frame memo per (session JVM, path).  A fresh load infers the
+# schema from the parquet footers (~75-100 ms/table) and pays
+# DataSource resolution, file listing, the _spread size checks and
+# _normalize_timestamps' dtypes-triggered analysis (12-28 ms/table
+# even with the schema supplied, r15), recurring for every one of the
+# several hundred table loads in a registry sweep and on every bench
+# sample's plan rebuild.  A DataFrame is an immutable plan handle —
+# reusing the object across queries holds NO data (execution still
+# scans parquet; persisted frames live in Spark's CacheManager).
+# Entries carry the directory stamp plus every session input the
+# _spread decision reads (maxPartitionBytes, parallelism), so an
+# overwrite (no writer has to remember invalidate_schema_cache) or a
+# re-configured session re-loads instead of serving a stale plan.
+# Paths where stat fails (non-local FS) stamp None: memo by path only.
 _DF_CACHE: dict[tuple[int, str], tuple[object, object, DataFrame]] = {}
 
 
@@ -274,14 +260,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _DF_CACHE.get(key)
     if cached is not None and cached[0] == stamp and cached[1] == spread_inputs:
         return cached[2]
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is None or hit[0] != stamp:
-        reader = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = (stamp, reader.schema)
-        df = reader
-    else:
-        df = spark.read.schema(hit[1]).parquet(path)
-    df = _spread(spark, df, path, name)
+    df = _spread(spark, spark.read.parquet(path), path, name)
     df = _normalize_timestamps(df, name)
     _DF_CACHE[key] = (stamp, spread_inputs, df)
     return df

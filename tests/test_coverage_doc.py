@@ -8,10 +8,12 @@ build instead of silently drifting from ``build_registry()``.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from rc_scanner_spark.queries import build_registry
 
-COVERAGE = "/root/repo/COVERAGE.md"
+ROOT = Path(__file__).resolve().parent.parent
+COVERAGE = ROOT / "COVERAGE.md"
 
 # Families documented in COVERAGE.md via a shorthand ("`q3ish`" inside
 # the TPC-H row, "+ `_all` variants" in set ops) rather than their full
@@ -37,7 +39,7 @@ def test_coverage_header_counts_match_registry():
 
 def test_readme_counts_match_registry():
     reg = build_registry()
-    text = open("/root/repo/README.md", encoding="utf-8").read()
+    text = open(ROOT / "README.md", encoding="utf-8").read()
     m = re.search(r"exposes all (\d+) queries; (\d+) carry a DuckDB", text)
     assert m, "README correctness counts sentence missing/reformatted"
     assert int(m.group(1)) == len(reg)

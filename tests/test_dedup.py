@@ -187,6 +187,32 @@ def test_dedup_release_caches_empties_persistent_rdds(spark, docs):
     assert after <= baseline
 
 
+def test_ngram_jaccard_reuses_minhash_shingle_frame(spark):
+    """The near-dup family shares one tokenization through Spark's
+    cache manager alone: after dedup_minhash_lsh has run, building
+    dedup_ngram_jaccard adds only its own df frame to the cache, and
+    its plan scans the cached (id, shingle) frame."""
+    import re
+
+    from rc_scanner_spark.operators.dedup import release_caches
+    from rc_scanner_spark.queries import build_registry
+
+    registry = build_registry()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release_caches()
+    registry["dedup_minhash_lsh"].fn(spark, SF_SMOKE).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    n_cached = cache.cachedData().size()
+    df = registry["dedup_ngram_jaccard"].fn(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    try:
+        assert cache.cachedData().size() == n_cached + 1
+        assert re.search(r"InMemoryTableScan \[id#\d+L, shingle#\d+L\]", plan)
+    finally:
+        release_caches()
+
+
 def test_decontaminate_flags_planted_overlap(spark):
     """A train doc embedding a benchmark 8-gram is flagged; disjoint
     docs are clean; a doc sharing only a 7-gram stays clean."""

@@ -80,24 +80,25 @@ def test_cc_clusters_chain_via_two_keys(spark, tmp_path):
 
 def test_cc_no_cached_plans_left(spark):
     """localCheckpoint frames are unpersisted-on-GC; assert the solver
-    leaves no *tracked* persistent RDDs behind via the public API."""
-    # Reset first: OTHER operators legitimately register tracked
-    # persists (e.g. the shared co-purchase edge frame) — a prior test
-    # in the same session must not fail this one (order-independence).
-    from rc_scanner_spark.operators.dedup import _CACHED, release_caches
+    leaves nothing in Spark's cache manager, the one record of
+    persisted query state."""
+    # Reset first: OTHER operators legitimately persist frames (e.g.
+    # the shared co-purchase edge frame) — a prior test in the same
+    # session must not fail this one (order-independence).
+    from rc_scanner_spark.operators.dedup import release_caches
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     release_caches()
+    assert cache.isEmpty()
     _cc_map(spark, [(1, 2), (2, 3)])
-    # localCheckpoint RDDs are session-managed; the operator itself
-    # must not register anything in the dedup cache registry.
-    assert _CACHED == []
+    assert cache.isEmpty()
 
 
 def test_cc_restores_session_confs(spark):
-    """The r15 AQE-off loop scope must restore the shared session's
-    confs — on success AND on failure (the driver's session outlives
+    """The solver must leave the shared session's confs as it found
+    them — on success AND on failure (the driver's session outlives
     every query; a leaked conf would silently deoptimize everything
-    after the first CC query)."""
+    after the first CC query).  It sets none."""
     import pytest
 
     prior_parts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -91,8 +91,7 @@ def cartesians(plan: str) -> int:
 
 def audit(plan: str) -> dict[str, int | bool]:
     return {
-        "exchanges": len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)", plan))
-        + plan.count("Exchange RoundRobin"),
+        "exchanges": len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)", plan)),
         "bhj": plan.count("BroadcastHashJoin"),
         "smj": plan.count("SortMergeJoin"),
         "pushed": bool(re.search(r"PushedFilters: \[[^\]]", plan)),

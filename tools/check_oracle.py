@@ -8,11 +8,12 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rc_scanner_spark import TABLES
 from rc_scanner_spark.queries import build_registry
@@ -70,8 +71,8 @@ def main() -> int:
     for name, spec in registry.items():
         if filters and not any(f in name for f in filters):
             continue
-        # tracked persists (graph edges, shingle frames, ...) must not
-        # accumulate across a 200-query sweep
+        # persisted intermediates (graph edges, shingle frames, ...)
+        # must not accumulate across a 400-query sweep
         release_caches()
         try:
             sdf = spec.fn(spark, sf_dir).toPandas()

@@ -42,7 +42,7 @@ def warm_up(spark, registry, sf_dir: str) -> None:
     spark.sql("SELECT lower('MÜller straße 你好 Ω'), upper('ñoño')").collect()
 
 
-def _passes(spark, names: list[str], reps: int, failed: dict):
+def _passes(names: list[str], reps: int, failed: dict):
     """Yield ``(pass, name)`` in bench.py's order, clearing caches by
     its rule.  Names in ``failed`` are skipped from then on, and the
     query after a failed one starts from cleared caches."""
@@ -55,7 +55,6 @@ def _passes(spark, names: list[str], reps: int, failed: dict):
             if name in failed:
                 continue
             if prev is None or _share_group(prev) != _share_group(name):
-                spark.catalog.clearCache()
                 release_caches()
             yield k, name
             prev = None if name in failed else name
@@ -68,7 +67,7 @@ def time_queries(spark, registry, names, sf_dir: str, reps: int, build_only=Fals
     ``spec.fn()`` alone when ``build_only``."""
     times: dict[str, list[float]] = {n: [] for n in names}
     failed: dict[str, Exception] = {}
-    for k, name in _passes(spark, names, reps, failed):
+    for k, name in _passes(names, reps, failed):
         t = time.perf_counter()
         try:
             df = registry[name].fn(spark, sf_dir)
@@ -98,7 +97,7 @@ def trace_queries(registry, names, sf_dir: str, reps: int):
         tracer = Tracer(spark)
         warm_up(spark, registry, sf_dir)
         failed: dict[str, Exception] = {}
-        for k, name in _passes(spark, names, reps, failed):
+        for k, name in _passes(names, reps, failed):
             try:
                 df = tracer.build(name, f"pass{k}", registry[name].fn, spark, sf_dir)
                 tracer.execute(name, f"pass{k}", df)
