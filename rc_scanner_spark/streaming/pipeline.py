@@ -18,9 +18,20 @@ micro-batch's files in its ``_spark_metadata`` log when the batch
 commits, and Spark reads of the output directory list only the files
 in that log, so a batch retried after its files landed is not seen
 twice.
+
+Checkpoint writes: every micro-batch commits its offset log, its
+commit log, the sink's ``_spark_metadata`` log and one state-store
+delta per state partition, each by a rename.  On local paths
+``start_flaglog_sink`` commits them through Spark's
+``FileSystem``-based checkpoint manager, not the default
+``FileContext`` one, whose renames fork ``readlink`` on a Hadoop
+without its native library; other file systems keep the default.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,6 +135,37 @@ def build_pipeline(
 
 FLAGLOG_COLUMNS = ("filter", "title", "user", "date", "filename", "match_message")
 
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def is_local_path(path: str, default_fs: str) -> bool:
+    """True when ``path`` names the local file system: its scheme is
+    ``file``, or it has none and ``default_fs`` (Hadoop's
+    ``fs.defaultFS``) is ``file:``.  Parses the strings only."""
+    return (urlparse(path).scheme or urlparse(default_fs).scheme) == "file"
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, settings: dict[str, str]):
+    """Sets ``settings`` on the session for the ``with`` block, then
+    restores each key's previous value, or unsets a key that had none,
+    also when the block raises."""
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 def start_flaglog_sink(
     flagged: DataFrame,
@@ -145,21 +187,38 @@ def start_flaglog_sink(
     of state tasks per micro-batch.  Streaming plans run without AQE,
     so nothing would coalesce the batch default (``max(16, cores)``):
     at 16 partitions on 4 cores every trigger ran 16 near-empty state
-    tasks in four waves, each paying its own state-store commit.  The
-    query clones the session inside ``start()``, so the value is
-    scoped to it; the session's own value is restored on return, also
-    when ``start()`` raises.  Spark records the count in the checkpoint's offset log
-    and reads it back on restart: the state partition count is fixed
-    once per checkpoint, from the cores available when that
-    checkpoint was first started (a checkpoint written at 16 keeps
-    16).  To change it, start from a new checkpoint."""
+    tasks in four waves, each paying its own state-store commit.
+    Spark records the count in the checkpoint's offset log and reads
+    it back on restart: the state partition count is fixed once per
+    checkpoint, from the cores available when that checkpoint was
+    first started (a checkpoint written at 16 keeps 16).  To change
+    it, start from a new checkpoint.
+
+    When ``checkpoint_dir`` and ``out_dir`` are both local (see
+    ``is_local_path``), the query also starts with Spark's
+    ``FileSystemBasedCheckpointFileManager``: it commits every log and
+    state-store file with one local ``rename(2)``, which is atomic and
+    overwrites, where the default ``FileContext`` manager forks
+    ``readlink`` four times per rename on a Hadoop without its native
+    library.  Checksum files stay on.  Remote paths (HDFS, object
+    stores) keep Spark's default, which Spark prefers there for
+    ``FileContext``'s atomic rename-with-overwrite, and a manager the
+    session already names is kept.  Both managers write
+    the same files, so a checkpoint first written under the default
+    restarts under this one.
+
+    The query clones the session inside ``start()``, so both values
+    are scoped to it; the session's own values are restored on
+    return, also when ``start()`` raises."""
     spark = flagged.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
+    settings = {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)}
+    if spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None:
+        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
+            "fs.defaultFS", "file:///"
         )
+        if is_local_path(checkpoint_dir, default_fs) and is_local_path(out_dir, default_fs):
+            settings[CHECKPOINT_MANAGER_KEY] = LOCAL_CHECKPOINT_MANAGER
+    with _session_conf(spark, settings):
         return (
             flagged.select(*FLAGLOG_COLUMNS)
             .writeStream.format("json")
@@ -169,5 +228,3 @@ def start_flaglog_sink(
             .option("checkpointLocation", checkpoint_dir)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)

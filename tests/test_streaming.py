@@ -15,8 +15,11 @@ from rc_scanner_spark.filters import FilterSpec
 from rc_scanner_spark.schemas import CHANGE_SCHEMA
 from rc_scanner_spark.sources.sse import RcChangeDataSource
 from rc_scanner_spark.streaming.pipeline import (
+    CHECKPOINT_MANAGER_KEY,
     FLAGLOG_COLUMNS,
+    LOCAL_CHECKPOINT_MANAGER,
     build_pipeline,
+    is_local_path,
     read_change_stream,
     start_flaglog_sink,
 )
@@ -210,40 +213,70 @@ def test_sse_parser_unterminated_frame_flushes():
     assert [f["data"] for f in frames] == ["tail-no-blank-line"]
 
 
-def test_checkpoint_restart_is_exactly_once(spark, users, revisions, tmp_path):
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(q) -> str:
+    """Class name of the running query's offset-log file manager."""
+    return q._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+
+
+@pytest.mark.parametrize(
+    "first_manager",
+    [None, FILE_CONTEXT_MANAGER],
+    ids=["same_manager", "from_filecontext"],
+)
+def test_checkpoint_restart_is_exactly_once(
+    spark, users, revisions, tmp_path, first_manager
+):
     """C2 analog: the reference loses its position on connection drop
     (scanner.py:82-88); checkpointing must resume without reprocessing
-    or losing events across a stop/restart."""
+    or losing events across a stop/restart.  ``from_filecontext``
+    writes the checkpoint's first run under Spark's default FileContext
+    manager and restarts it under the local one."""
     src = tmp_path / "ck_in"
     src.mkdir()
     out_dir = str(tmp_path / "ck_out")
     ckpt = str(tmp_path / "ck_ckpt")
 
-    def start():
+    def run():
         stream = read_change_stream(spark, str(src))
         flagged = build_pipeline(stream, _spec(), users=users, revisions=revisions)
-        return start_flaglog_sink(flagged, out_dir, ckpt)
+        q = start_flaglog_sink(flagged, out_dir, ckpt)
+        try:
+            q.processAllAvailable()
+            return _checkpoint_manager(q)
+        finally:
+            q.stop()
 
     write_changes_jsonl(
         str(src / "a.json"), [make_change(i, f"CkA{i}") for i in range(0, 6)]
     )
-    q = start()
-    q.processAllAvailable()
-    q.stop()
+    if first_manager is None:
+        assert run() == LOCAL_CHECKPOINT_MANAGER
+    else:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, first_manager)
+        try:
+            assert run() == first_manager
+        finally:
+            spark.conf.unset(CHECKPOINT_MANAGER_KEY)
     first = spark.read.json(out_dir).count()
     assert first == 3  # even revisions carry 'spark text'
 
-    # restart from the same checkpoint with one more file present
+    # restart from the same checkpoint with one more file present; it
+    # flags CkA0 and CkA2 again, which the dedup state must suppress
     write_changes_jsonl(
-        str(src / "b.json"), [make_change(i, f"CkB{i}") for i in range(6, 12)]
+        str(src / "b.json"),
+        [make_change(i, f"CkB{i}") for i in range(6, 12)]
+        + [make_change(12, "CkA0"), make_change(14, "CkA2")],
     )
-    q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
+    assert run() == LOCAL_CHECKPOINT_MANAGER
     titles = [r["title"] for r in spark.read.json(out_dir).collect()]
     # batch a NOT reprocessed, batch b fully processed
-    assert len(titles) == 6, sorted(titles)
-    assert len(set(titles)) == 6
+    assert sorted(titles) == ["CkA0", "CkA2", "CkA4", "CkB10", "CkB6", "CkB8"]
 
 
 def _state_partitions(q) -> int:
@@ -291,11 +324,50 @@ def test_flaglog_state_runs_one_partition_per_core(
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_flaglog_local_checkpoint_uses_filesystem_manager(
+    spark, users, revisions, tmp_path
+):
+    """A flag log checkpointed on the local file system commits its
+    logs through Spark's FileSystem-based manager, and the session's
+    own value of the key is the same after the start as before."""
+    src = tmp_path / "in"
+    src.mkdir()
+    write_changes_jsonl(
+        str(src / "a.json"), [make_change(i, f"L{i}") for i in range(6)]
+    )
+    before = spark.conf.get(CHECKPOINT_MANAGER_KEY, None)
+    flagged = build_pipeline(
+        read_change_stream(spark, str(src)), _spec(), users=users, revisions=revisions
+    )
+    q = start_flaglog_sink(flagged, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    try:
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) == before
+        q.processAllAvailable()
+        assert _checkpoint_manager(q) == LOCAL_CHECKPOINT_MANAGER
+    finally:
+        q.stop()
+    assert sorted(r.title for r in spark.read.json(str(tmp_path / "out")).collect()) == [
+        "L0",
+        "L2",
+        "L4",
+    ]
+
+
+def test_is_local_path():
+    """Parses the path and the default file system only."""
+    assert is_local_path("file:///x", "hdfs://nn:8020")
+    assert is_local_path("/x", "file:///")
+    assert is_local_path("logs/_checkpoint", "file:///")
+    assert not is_local_path("/x", "hdfs://nn:8020")
+    assert not is_local_path("hdfs://nn/x", "file:///")
+    assert not is_local_path("s3a://b/x", "file:///")
+
+
 def test_flaglog_failed_start_restores_shuffle_partitions(
     spark, tmp_path, pinned_shuffle_partitions
 ):
     """A start() that raises must not leave the session at the
-    stream's partition count."""
+    stream's partition count or checkpoint manager."""
     src = tmp_path / "in"
     src.mkdir()
     before = pinned_shuffle_partitions
@@ -306,9 +378,11 @@ def test_flaglog_failed_start_restores_shuffle_partitions(
     for c in ("filter", "date", "filename", "match_message"):
         stream = stream.withColumn(c, F.lit("x"))
     counts = stream.groupBy(*FLAGLOG_COLUMNS).count()
+    manager_before = spark.conf.get(CHECKPOINT_MANAGER_KEY, None)
     with pytest.raises(Exception, match="(?i)append"):
         start_flaglog_sink(counts, str(tmp_path / "out"), str(tmp_path / "ckpt"))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) == manager_before
 
 
 def test_flaglog_restart_keeps_checkpoint_partitions(
