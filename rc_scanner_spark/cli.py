@@ -46,6 +46,12 @@ def _get_args(argv: list[str]) -> argparse.Namespace:
     return parser.parse_args(argv)
 
 
+def _has_sink_log(spark, path: str) -> bool:
+    """True when ``path`` holds a streaming file sink's metadata log."""
+    log = spark._jvm.org.apache.hadoop.fs.Path(path, "_spark_metadata")
+    return log.getFileSystem(spark._jsc.hadoopConfiguration()).exists(log)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _get_args(argv if argv is not None else sys.argv[1:])
     try:
@@ -84,6 +90,15 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination()
         return 0
 
+    if "flaglog" in paths and _has_sink_log(spark, paths["flaglog"]):
+        # A stream's file sink owns this directory: Spark's readers
+        # list only the files its _spark_metadata log names, so batch
+        # part files appended here would never be read back.
+        raise SystemExit(
+            f"{paths['flaglog']} is a stream flag log (it holds "
+            "_spark_metadata); batch mode will not append to it — pick "
+            "another --out"
+        )
     changes = spark.read.schema(CHANGE_SCHEMA).json(args.input)
     flagged = scan(changes, spec, users=users, revisions=revisions,
                    verbose=args.verbose)

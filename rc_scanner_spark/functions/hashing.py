@@ -1,6 +1,8 @@
 """Engine-portable hashing: the md5-prefix-long trick shared by every
-portable twin (Count-Min buckets, Bloom positions, DSIR features,
-LSH planes, substring-span keys, uniform sampling).
+portable twin (MinHash signatures and band buckets, SimHash word
+hashes, Count-Min buckets, Bloom positions, DSIR features, LSH
+planes, substring-span keys, hash splits and samples).  Multi-input
+hashes join their inputs first: ``md5_long(concat_ws(':', a, b))``.
 
 One definition so a change to the hash width or the hex-cast
 portability trick lands everywhere at once; the DuckDB twin of

@@ -1,18 +1,21 @@
 """Deduplication operators for document corpora.
 
-Exact dedup is a hash-groupBy; near-dup is MinHash+LSH (banding) or
-SimHash — both implemented as pure Catalyst expression pipelines
-(xxhash64 + array higher-order functions), no Python UDFs, so every
-stage is whole-stage-codegen'd and shuffles only on the band buckets.
+Exact dedup is a hash-groupBy; near-dup is MinHash+LSH (banding),
+prefix-filtered or blocked Jaccard, or SimHash — all implemented as
+pure Catalyst expression pipelines (xxhash64 + array higher-order
+functions), no Python UDFs, so every stage is whole-stage-codegen'd
+and shuffles only on small keys.
 
 Scale notes (the design target is ~100 TB of documents):
 - shingling + signatures are map-side only (no shuffle);
 - LSH banding shuffles once on (band, band_hash) — the candidate join
-  is an equi-join on that key, never an all-pairs cross join;
-- verification re-joins the two candidate doc sides by id; at scale
-  you carry the shingle arrays through the band join only for
-  candidates (a semi-join first keeps the wide arrays off the big
-  shuffle).
+  (``_band_candidates``) is an equi-join on that key, never an
+  all-pairs cross join;
+- verification (``_verify_pairs``, shared by MinHash and prefix
+  Jaccard) is pair-restricted: each a-side token is routed through the
+  candidate pair list and equi-joined to the b-side on (id_b, token),
+  so its work is linear in pairs x tokens per doc and no shingle array
+  rides through the candidate join.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from .text import normalize, words
 
 # Persisted intermediates are recorded in Spark's CacheManager and
@@ -144,69 +148,91 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
 
 
-def minhash_signature_frame(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, n_sh, h0..h{n-1}) MinHash signatures as a plain frame — the
-    storable/mergeable form: write it as a sidecar table and two
-    corpora (or a stream batch vs its accumulated corpus) can
-    near-dup-join WITHOUT re-reading any text.  Same hash basis as
-    ``minhash_lsh_pairs``."""
-    # explode_outer: a doc with ZERO shingles (e.g. symbol-only text
-    # after scrubbing) still gets a sidecar row (n_sh=0, NULL mins) —
-    # a plain explode would silently drop it from the signature table,
-    # making the corpus and sidecar row sets diverge.
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(hashed_word_shingles(F.col(text_col), shingle_k)).alias(
-            "shingle"
-        ),
-    )
-    # the per-seed min is CASE-guarded: xxhash64 SKIPS a NULL arg (it
-    # returns the seed's own hash, not NULL), so without the guard
-    # every zero-shingle doc would get the same non-NULL constant
-    # signature and all such docs would band together as perfect
-    # "near-dups" of each other (review r8 round 7, verified live) —
-    # with the guard their mins are NULL and minhash_band_buckets
-    # excludes them from candidacy entirely
-    return sh.groupBy("id").agg(
-        F.count("shingle").alias("n_sh"),
-        *[
-            F.expr(
-                f"min(CASE WHEN shingle IS NOT NULL"
-                f" THEN xxhash64({seed}L, shingle) END) AS h{seed}"
-            )
-            for seed in range(num_hashes)
-        ],
+def _band_candidates(banded: DataFrame, verify_threshold: float) -> DataFrame:
+    """Distinct ``(id_a, n_a, id_b, n_b)`` pairs, ``id_a < id_b``, that
+    share a band bucket of an ``(id, n_sh, band, bucket)`` frame: the
+    LSH candidate self-equi-join of both MinHash forms, never an
+    all-pairs cross join.
+
+    n_sh (the doc's shingle count) rides through the banding, so the
+    join applies the PPJoin length filter of ``prefix_jaccard_pairs``
+    (lossless for the verified output) and verification needs no join
+    back to the counts."""
+    l, r = banded.alias("l"), banded.alias("r")
+    size_ok = F.lit(verify_threshold - 1e-4)
+    return (
+        l.join(
+            r,
+            on=[
+                F.col("l.band") == F.col("r.band"),
+                F.col("l.bucket") == F.col("r.bucket"),
+                F.col("l.id") < F.col("r.id"),
+                F.col("l.n_sh") >= size_ok * F.col("r.n_sh"),
+                F.col("r.n_sh") >= size_ok * F.col("l.n_sh"),
+            ],
+        )
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("l.n_sh").alias("n_a"),
+            F.col("r.id").alias("id_b"),
+            F.col("r.n_sh").alias("n_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def minhash_band_buckets(
-    sig: DataFrame, num_hashes: int = 32, bands: int = 8
+def _verify_pairs(
+    tokens: DataFrame, tok: str, cand: DataFrame, threshold: float
 ) -> DataFrame:
-    """(id, band, bucket) LSH band keys from a signature frame
-    (``minhash_signature_frame`` output or its parquet sidecar).
-    Zero-shingle rows (n_sh = 0, NULL mins) are excluded: they carry
-    no content evidence, and their band keys would otherwise be the
-    hash of all-NULLs — one shared bucket fusing every empty doc."""
-    sig = sig.filter(F.col("n_sh") > 0)
-    rows_per_band = num_hashes // bands
-    band_structs = ", ".join(
-        "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
-            b=b,
-            cols=", ".join(
-                f"h{b * rows_per_band + i}" for i in range(rows_per_band)
+    """Exact-Jaccard verification of candidate pairs ``(id_a, id_b,
+    n_a, n_b)`` over the ``(id, <tok>)`` rows of ``tokens``: returns
+    ``(id_a, id_b, jaccard)`` for the pairs whose Jaccard, rounded to 4
+    decimals, is at least ``threshold`` (> 0).
+
+    The intersection is PAIR-restricted: a-side tokens are routed
+    through the candidate pair list first, so the b-side equi-join is
+    keyed on (id_b, tok) and emits work linear in |pairs| x tokens/doc.
+    An unrestricted tok == tok intersect would emit m x n rows for a
+    hot token shared by m a-docs and n b-docs even when those pairs
+    were never candidates — the quadratic term candidate generation
+    exists to avoid.  |A u B| = n_a + n_b - |A n B| with the counts
+    carried on the pair, and the output emits straight from the
+    intersection aggregate: a pair with no common token is absent from
+    it, which is why the threshold must be positive.  Both joins are
+    plain shuffle equi-joins (no broadcast hint: the candidate set
+    grows with the corpus; AQE may still broadcast a side it measures
+    small)."""
+    pair_tok = tokens.join(cand, tokens.id == cand.id_a).select(
+        "id_a", "id_b", "n_a", "n_b", tok
+    )
+    common = (
+        pair_tok.join(
+            tokens.select(F.col("id").alias("id_b"), tok),
+            on=["id_b", tok],
+        )
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return (
+        common.withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_common")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+                4,
             ),
         )
-        for b in range(bands)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
-    return sig.selectExpr(
-        "id", f"explode(array({band_structs})) AS bb"
-    ).select("id", "bb.band", "bb.bucket")
+
+
+def _check_threshold(verify_threshold: float) -> None:
+    if not verify_threshold > 0:
+        raise ValueError(
+            f"verify_threshold must be > 0, got {verify_threshold!r} "
+            "(pairs sharing no shingle are pruned by construction)"
+        )
 
 
 def minhash_lsh_pairs(
@@ -216,22 +242,22 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 3,
-    verify_threshold: float | None = 0.5,
+    verify_threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via MinHash + LSH banding.
+    """Near-duplicate pairs via MinHash + LSH banding.
 
     Pipeline (all codegen'd, shuffles only on small keys):
       1. explode shingles -> groupBy(id) with min(xxhash64(seed, sh))
          per permutation (map-side partial aggregation does the heavy
          lifting; one shuffle on id);
       2. band the signature, explode (band, bucket), self-equi-join on
-         the bucket — never an all-pairs cross join;
-      3. verify candidates with exact Jaccard computed by a second
-         explode-join on shingles restricted to candidate ids
-         (semi-join pushdown keeps the big side small).
+         the bucket (``_band_candidates``);
+      3. keep the candidates whose exact Jaccard is at least
+         ``verify_threshold`` (> 0; ``_verify_pairs``).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
+    _check_threshold(verify_threshold)
     rows_per_band = num_hashes // bands
     # The exploded shingle frame feeds three consumers here (signatures
     # and both sides of the verification join) and is SHARED with the
@@ -249,11 +275,10 @@ def minhash_lsh_pairs(
     # array: building them as nested Column calls costs ~1 s of py4j
     # round-trips per query construction (measured sf-independent
     # driver overhead), the parsed plan is identical.
-    # sig feeds three consumers (both sides of the band self-join plus
-    # the n_sh counts); persisted, else each consumer re-runs the
-    # 128-min aggregate (~2 s CPU x 8 AQE stages at sf0.1).  5000 rows
-    # x 129 longs here; at 100 TB the signature table is the thing you
-    # materialize to parquet anyway.
+    # sig feeds both sides of the band self-join; persisted, else each
+    # side re-runs the 128-min aggregate (~2 s CPU x 8 AQE stages at
+    # sf0.1).  5000 rows x 129 longs here; at 100 TB the signature
+    # table is the thing you materialize to parquet anyway.
     sig = sh.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_sh"),
         *[
@@ -270,105 +295,11 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     )
-    # n_sh rides along through the band explode and the candidate
-    # join: it is functionally determined by id, so carrying it (one
-    # BIGINT per banded row) makes the two post-verification joins
-    # back to the signature counts unnecessary — r14: the old tail was
-    # cand LEFT JOIN common plus TWO count joins (a SortMergeJoin and
-    # two BroadcastHashJoins in the plan); the new tail is zero extra
-    # joins past the intersection count.
     banded = sig.selectExpr(
         "id", "n_sh", f"explode(array({band_structs})) AS bb"
     ).select("id", "n_sh", "bb.band", "bb.bucket")
-
-    left, right = banded.alias("l"), banded.alias("r")
-    # r14 batch 6 — the PPJoin LENGTH filter (prefix_jaccard_pairs
-    # precedent), valid here because n_sh rides the banded rows and
-    # the verified output keeps only round(J,4) >= t: J <=
-    # min(n)/max(n), so a pair with min(n) < (t - 1e-4)·max(n) can
-    # never survive the final filter — dropping it at the band join is
-    # results-identical and prunes before the dedup exchange and the
-    # verification expansion.  The size predicate is pair-global (not
-    # band-dependent), so filter-then-dedup == dedup-then-filter.
-    # Only for verified calls: verify_threshold=None returns ALL
-    # banded candidates and must stay unfiltered.
-    cand_on = [
-        F.col("l.band") == F.col("r.band"),
-        F.col("l.bucket") == F.col("r.bucket"),
-        F.col("l.id") < F.col("r.id"),
-    ]
-    if verify_threshold is not None and verify_threshold > 0:
-        size_ok = F.lit(verify_threshold - 1e-4)
-        cand_on += [
-            F.col("l.n_sh") >= size_ok * F.col("r.n_sh"),
-            F.col("r.n_sh") >= size_ok * F.col("l.n_sh"),
-        ]
-    cand = (
-        left.join(right, on=cand_on)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("l.n_sh").alias("n_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("r.n_sh").alias("n_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if verify_threshold is None:
-        return cand.select("id_a", "id_b").withColumn(
-            "jaccard", F.lit(None).cast("double")
-        )
-
-    # Exact-Jaccard verification on candidates only: |A∩B| via a
-    # shingle equi-join, |A∪B| = |A|+|B|-|A∩B|.  The intersection is
-    # PAIR-restricted: a-side shingles are routed through the candidate
-    # pair list first, so the b-side equi-join is keyed on
-    # (id_b, shingle) and emits work linear in |pairs|×shingles/doc.
-    # An unrestricted shingle==shingle_b intersect would emit m×n rows
-    # for a hot shingle shared by m a-docs and n b-docs even when those
-    # pairs were never LSH candidates — the quadratic term the banding
-    # exists to avoid.  Both joins are plain shuffle equi-joins (no
-    # broadcast hint: the candidate set grows with the corpus, so a
-    # driver-small assumption would OOM at 100 TB; AQE may still pick
-    # broadcast when it measures the build side as small).
-    #
-    # For verify_threshold > 0 the old cand-LEFT-JOIN-common tail is
-    # equivalent to emitting straight from the intersection aggregate:
-    # a candidate pair with NO common shingle had jaccard
-    # coalesce(NULL, 0) / (n_a + n_b) = 0 < threshold and was always
-    # filtered, and every ``common`` row descends from a ``cand`` row
-    # by construction (the pair routing), so the inner join back to
-    # cand was an identity.  n_a/n_b arrive carried on the pair —
-    # no join with the counts frame at all.  (A non-positive
-    # threshold would need the zero-intersection pairs back; callers
-    # pin 0.5, and the None branch above covers "no verification".)
-    if verify_threshold <= 0:
-        raise ValueError(
-            "verify_threshold must be > 0 or None (pairs sharing no "
-            "shingle are pruned by construction)"
-        )
-    pair_sh = sh.join(cand, sh.id == cand.id_a).select(
-        "id_a", "id_b", "n_a", "n_b", "shingle"
-    )
-    common = (
-        pair_sh.join(
-            sh.select(F.col("id").alias("id_b"), "shingle"),
-            on=["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    out = (
-        common.withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
+    cand = _band_candidates(banded, verify_threshold)
+    return _verify_pairs(sh, "shingle", cand, verify_threshold)
 
 
 def ngram_jaccard_pairs(
@@ -859,15 +790,16 @@ def prefix_jaccard_pairs(
         "id", "n_tok", F.explode(F.slice("toks", 1, plen)).alias("tok")
     )
     l, r = prefix.alias("l"), prefix.alias("r")
-    # r14 batch 6 — PPJoin LENGTH filter (Xiao et al. §3.1), evaluated
-    # inside the join: J(a,b) = c/(n_a+n_b-c) with c <= min(n) and
-    # n_a+n_b-c >= max(n), so J <= min(n)/max(n); the output keeps only
-    # round(J,4) >= t, hence every surviving pair has min(n) >=
-    # (t - 5e-5)·max(n).  The guard uses t - 1e-4 (strictly looser, so
-    # float noise cannot clip a survivor): pairs it drops satisfy
-    # round(J,4) <= J + 5e-5 < t and were discarded by the final
-    # filter anyway — identical output, fewer pairs through the
-    # dedup exchange and the verification expansion.
+    # PPJoin LENGTH filter (Xiao et al. §3.1), evaluated inside the
+    # join: J(a,b) = c/(n_a+n_b-c) with c <= min(n) and n_a+n_b-c >=
+    # max(n), so J <= min(n)/max(n); the output keeps only round(J,4)
+    # >= t, hence every surviving pair has min(n) >= (t - 5e-5)·max(n).
+    # The guard uses t - 1e-4 (strictly looser, so float noise cannot
+    # clip a survivor): pairs it drops satisfy round(J,4) <= J + 5e-5
+    # < t and were discarded by the final filter anyway — identical
+    # output, fewer pairs through the dedup exchange and the
+    # verification expansion.  The predicate is a function of the pair
+    # alone, so filter-then-dedup equals dedup-then-filter.
     size_ok = F.lit(threshold - 1e-4)
     cand = (
         l.join(
@@ -885,14 +817,15 @@ def prefix_jaccard_pairs(
             F.col("l.n_tok").alias("n_a"),
             F.col("r.n_tok").alias("n_b"),
         )
-        # Width-pinned exchange (r14): the verification tail below is
-        # ONE fused stage of broadcast joins streamed from this
-        # candidate list, so ITS partitioning is the tail's
-        # parallelism — AQE byte-coalescing saw a few MB of pairs and
-        # ran the whole pair x token expansion (~5.7 s CPU at sf0.1)
-        # on one task.  A user repartition is exempt from coalescing;
-        # the big expanded stream itself still never crosses a
-        # shuffle (see the revert note below).
+        # Width-pinned exchange: the verification tail is ONE fused
+        # stage of broadcast joins streamed from this candidate list,
+        # so ITS partitioning is the tail's parallelism — AQE
+        # byte-coalescing saw a few MB of pairs and ran the whole pair
+        # x token expansion (~5.7 s CPU at sf0.1) on one task.  A user
+        # repartition is exempt from coalescing.  Pinning the expanded
+        # pair x token stream instead measured 2x worse: it forced all
+        # of it (566 MB at sf0.1) through an exchange, where the
+        # planner's own join placement moves only ~8 MB.
         .repartition(
             df.sparkSession.sparkContext.defaultParallelism,
             "id_a",
@@ -900,62 +833,7 @@ def prefix_jaccard_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    # PAIR-restricted verification (the minhash_lsh_pairs shape): the
-    # a-side tokens are routed through the candidate PAIR list first,
-    # so the b-side equi-join is keyed on (id_b, tok) and emits work
-    # linear in |pairs| x tokens/doc.  The previous id-restricted form
-    # (ta.tok == tb.tok alone) emitted m x n rows for a token shared
-    # by m candidate a-docs and n candidate b-docs even for combos
-    # that were never prefix candidates — the quadratic hot-token term
-    # the prefix filter exists to avoid (review r8 round 7).  No
-    # broadcast hints: the candidate set grows with the corpus.
-    #
-    # r14 (the minhash_lsh_pairs tail rewrite): n_a/n_b ride on the
-    # candidate pair, and the output emits straight from the
-    # intersection aggregate — the old tail's cand INNER JOIN common
-    # was an identity (every common row descends from a cand row by
-    # the pair routing, and a pair with no common token was absent
-    # from common, hence from the inner join, either way).  One join
-    # removed; identical output row set.
-    # (r14 note: a width-pinned repartition of pair_tok was tried
-    # here and REVERTED — it forced materialization of the full
-    # pair x token stream through an exchange, 566 MB at sf0.1,
-    # where the planner's own join placement keeps that stream
-    # fused/broadcast inside one stage and only ~8 MB ever crosses a
-    # shuffle.  Measured 2x worse; the planner wins this one.)
-    pair_tok = tok.join(cand, tok.id == F.col("id_a")).select(
-        "id_a", "id_b", "n_a", "n_b", "tok"
-    )
-    common = (
-        pair_tok.join(
-            tok.select(F.col("id").alias("id_b"), "tok"),
-            on=["id_b", "tok"],
-        )
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _portable_hash64(*cols: Column) -> Column:
-    """Engine-portable 60-bit hash: md5 of the ':'-joined inputs,
-    first 15 hex chars as a long.  ~3x slower than xxhash64 — exists
-    so the LSH mechanism has an exactly-replayable twin in engines
-    without xxhash64 (the fast path stays on xxhash64)."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10
-    ).cast("long")
+    return _verify_pairs(tok, "tok", cand, threshold)
 
 
 def minhash_lsh_pairs_portable(
@@ -967,35 +845,21 @@ def minhash_lsh_pairs_portable(
     shingle_k: int = 3,
     verify_threshold: float = 0.5,
 ) -> DataFrame:
-    """MinHash+LSH with every hash step engine-portable (md5-derived),
+    """MinHash+LSH with every hash step engine-portable (``md5_long``),
     so a SQL oracle replays the EXACT candidate generation: per-seed
     signature mins, band buckets, candidate pairs, Jaccard verify.
 
-    Same pipeline shape as ``minhash_lsh_pairs`` (explode -> hash-agg
-    signature -> band equi-join -> candidate-restricted verification);
-    only the hash functions differ.  Use the xxhash64 form in
-    production — this one exists to put the LSH *mechanism* under the
-    external oracle gate.
+    Same pipeline as ``minhash_lsh_pairs`` (explode -> hash-agg
+    signature -> ``_band_candidates`` -> ``_verify_pairs``); only the
+    hash functions differ.  Use the xxhash64 form in production — this
+    one exists to put the LSH *mechanism* under the external oracle
+    gate.
     """
-    if verify_threshold is not None and verify_threshold <= 0:
-        raise ValueError(
-            "verify_threshold must be > 0 or None (pairs sharing no "
-            "shingle are pruned by construction)"
-        )
+    _check_threshold(verify_threshold)
     rows_per_band = num_hashes // bands
-    # r14 (the production minhash_lsh_pairs shape, measured on the
-    # same profile): the md5 signature aggregate (16 min-hashes per
-    # shingle) was evaluated TWICE (banding + the n_sh count joins)
-    # and the shingle explode THREE times (signature + both verify
-    # sides) — four ~8-13 s-CPU stages at sf0.1.  The shingle frame
-    # is persisted (one tokenize), n_sh rides through the banding and
-    # candidate join (one signature evaluation), and the verify tail
-    # emits straight from the intersection aggregate: a candidate
-    # with no common shingle had jaccard coalesce(NULL,0) = 0 <
-    # threshold and every common row descends from a cand row by the
-    # pair routing, so the old LEFT join + two count joins were
-    # identities.  The entry repartition runs the hash CPU at session
-    # width instead of the scan's spread width.
+    # The shingle frame is persisted (one tokenize for the signature
+    # and both verify sides); the entry repartition runs the hash CPU
+    # at session width instead of the scan's spread width.
     sh = (
         df.repartition(
             df.sparkSession.sparkContext.defaultParallelism, id_col
@@ -1011,9 +875,9 @@ def minhash_lsh_pairs_portable(
     sig = sh.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_sh"),
         *[
-            F.min(_portable_hash64(F.lit(str(seed)), F.col("shingle"))).alias(
-                f"h{seed}"
-            )
+            F.min(
+                md5_long(F.concat_ws(":", F.lit(str(seed)), F.col("shingle")))
+            ).alias(f"h{seed}")
             for seed in range(num_hashes)
         ],
     )
@@ -1025,11 +889,16 @@ def minhash_lsh_pairs_portable(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        _portable_hash64(
-                            *[
-                                F.col(f"h{b * rows_per_band + i}").cast("string")
-                                for i in range(rows_per_band)
-                            ]
+                        md5_long(
+                            F.concat_ws(
+                                ":",
+                                *[
+                                    F.col(f"h{b * rows_per_band + i}").cast(
+                                        "string"
+                                    )
+                                    for i in range(rows_per_band)
+                                ],
+                            )
                         ).alias("bucket"),
                     )
                     for b in range(bands)
@@ -1037,57 +906,8 @@ def minhash_lsh_pairs_portable(
             )
         ).alias("bb"),
     ).select("id", "n_sh", "bb.band", "bb.bucket")
-    l, r = banded.alias("l"), banded.alias("r")
-    # r14 batch 6: same lossless PPJoin length filter as the
-    # production form (see minhash_lsh_pairs) — verified-path only.
-    cand_on = [
-        F.col("l.band") == F.col("r.band"),
-        F.col("l.bucket") == F.col("r.bucket"),
-        F.col("l.id") < F.col("r.id"),
-    ]
-    if verify_threshold is not None and verify_threshold > 0:
-        size_ok = F.lit(verify_threshold - 1e-4)
-        cand_on += [
-            F.col("l.n_sh") >= size_ok * F.col("r.n_sh"),
-            F.col("r.n_sh") >= size_ok * F.col("l.n_sh"),
-        ]
-    cand = (
-        l.join(r, on=cand_on)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("l.n_sh").alias("n_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("r.n_sh").alias("n_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if verify_threshold is None:
-        return cand.select("id_a", "id_b").withColumn(
-            "jaccard", F.lit(None).cast("double")
-        )
-    pair_sh = sh.join(cand, sh.id == F.col("id_a")).select(
-        "id_a", "id_b", "n_a", "n_b", "shingle"
-    )
-    common = (
-        pair_sh.join(
-            sh.select(F.col("id").alias("id_b"), "shingle"),
-            on=["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    cand = _band_candidates(banded, verify_threshold)
+    return _verify_pairs(sh, "shingle", cand, verify_threshold)
 
 
 def simhash_pairs_portable(
@@ -1105,7 +925,7 @@ def simhash_pairs_portable(
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(words(F.col(text_col)))).alias("w"),
-    ).withColumn("h", _portable_hash64(F.col("w")))
+    ).withColumn("h", md5_long(F.concat_ws(":", F.col("w"))))
     # r14 batch 7: the 60 per-bit vote aggregates, the 4 x 15 chunk
     # chains and the explode array are SQL expression strings — the
     # Column-API builds cost ~9.5 s of driver plan construction per

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from ..functions.vectors import cosine
 from ..operators.dedup import (
     exact_dedup,
@@ -170,11 +171,7 @@ def q_sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a re-ingested doc always lands in the same split).  No shuffle:
     the bucket is a map-side projection."""
     d = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id").cast("string"), n_hex=4) % 100
     return d.select(
         "doc_id",
         bucket.alias("bucket"),
@@ -1439,11 +1436,7 @@ def q_sample_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(250))
     )
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 5),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")), n_hex=5)
         % 1000
     )
     return d.select(
@@ -1705,15 +1698,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rate_ppm"),
     )
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat(F.lit("strat:"), F.col("doc_id").cast("string")), n_hex=6)
         % 1000000
     )
     return (
@@ -2282,17 +2267,9 @@ def q_sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "partner_id",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(":", F.lit("neg"), F.col("doc_id"), F.col("draw"))
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(
+                F.concat_ws(":", F.lit("neg"), F.col("doc_id"), F.col("draw")), n_hex=12
+            )
             % F.col("n_docs"),
         )
         .filter(F.col("partner_id") != F.col("doc_id"))

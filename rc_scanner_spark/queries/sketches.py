@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 # lgConfigK = 12 -> 4 KiB sketches, ~1.6% relative standard error:
@@ -143,8 +144,6 @@ def _cm_bucket(depth: int, word):
     """Engine-portable Count-Min bucket: md5-derived 60-bit hash of
     'depth:word' mod width — the same trick as the portable LSH twins,
     so the DuckDB oracle replays the exact sketch."""
-    from ..functions.hashing import md5_long
-
     return md5_long(F.concat_ws(":", F.lit(str(depth)), word)) % _CM_WIDTH
 
 
@@ -379,13 +378,7 @@ def q_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 64
     m_space = float(16 ** 15)
     e = _t(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit("|kmv"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(F.concat(F.col("user_id").cast("string"), F.lit("|kmv")))
     hashes = e.select("event_type", h.alias("h")).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     kept = hashes.withColumn("rk", F.row_number().over(w)).filter(

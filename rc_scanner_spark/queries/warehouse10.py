@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 from .warehouse2 import (
     _SQL_EDGES_CTE,
@@ -182,9 +183,7 @@ def q_multimodal_augmentation_plan(
     Scale: pure map-side integer arithmetic on non-negative hashes —
     zero shuffles at any corpus size (the presentation sort is the
     only exchange)."""
-    h = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    h = md5_long(F.col("vec_id").cast("string"))
     return (
         _t(spark, sf_dir, "embeddings")
         .select("vec_id", h.alias("h"))

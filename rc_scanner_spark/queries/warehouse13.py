@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -83,9 +84,7 @@ def q_llm_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (review-round fix, r6)
     surv = surv.persist()
     u = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("bigint")
+        md5_long(F.col("doc_id").cast("string"))
         + 1
     ).cast("double") / F.lit(float(_HEX15))
     sampled = (

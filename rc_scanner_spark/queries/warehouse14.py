@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -55,13 +56,10 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     within md5 buckets ((N/B)^2 fan-out, B the blocking knob); the
     exact-intersection join is bucket-restricted to the same pair
     set.  Integer milli end-to-end."""
-    from ..operators.dedup import (
-        _portable_hash64,
-        word_shingles,
-    )
+    from ..operators.dedup import word_shingles
 
     # shared builders: word_shingles is the verified k-gram idiom the
-    # whole MinHash family uses; _portable_hash64 the md5-60bit twin.
+    # whole MinHash family uses; md5_long the md5-60bit twin.
     # sh feeds sig + both sides of the exact-intersection join and
     # sig feeds both pair sides — persist both (released by
     # bench/check_oracle) instead of re-running the shingle explode
@@ -76,13 +74,14 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "bucket",
-            _portable_hash64(F.col("doc_id").cast("string")) % _MA_BUCKETS,
+            md5_long(F.concat_ws(":", F.col("doc_id").cast("string")))
+            % _MA_BUCKETS,
         )
         .persist()
     )
     # r14 batch 7: the 16 md5-min aggregates and the 16-term match
     # sum are SQL expression strings (same md5/conv/concat_ws chains
-    # the Column forms parsed — the _portable_hash64 definition —
+    # the Column forms parsed — md5_long over concat_ws(':', ..) —
     # so every signature long is unchanged); cuts ~300 py4j calls of
     # driver plan construction per build.
     sig = (

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -54,9 +55,7 @@ def _fp_col() -> F.Column:
     # vacuous hash row).  conv() returns a string; 15 hex chars = 60
     # bits, so the cast can't overflow and both engines see the same
     # non-negative long.
-    return F.conv(
-        F.substring(F.md5(F.substring(F.col("text"), 1, 64)), 1, 15), 16, 10
-    ).cast("long")
+    return md5_long(F.substring(F.col("text"), 1, 64))
 
 
 def q_multimodal_phash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:

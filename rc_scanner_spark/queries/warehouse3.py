@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -385,11 +386,7 @@ def q_sample_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) — never a global sort; the hash order makes re-runs stable
     under repartitioning and cluster size changes."""
     d = _t(spark, sf_dir, "documents")
-    hv = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|res42"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit("|res42")))
     w = Window.partitionBy("lang").orderBy(hv.asc(), F.col("doc_id").asc())
     return (
         d.withColumn("rk", F.row_number().over(w))
@@ -1121,13 +1118,7 @@ def q_sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmin = e.groupBy("label").agg(F.count(F.lit(1)).alias("n")).agg(
         F.min("n").alias("kmin")
     )
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("|bal42"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_long(F.concat(F.col("vec_id").cast("string"), F.lit("|bal42")))
     w = Window.partitionBy("label").orderBy(hv.asc(), F.col("vec_id").asc())
     return (
         e.withColumn("rk", F.row_number().over(w))
@@ -1397,15 +1388,7 @@ FROM cum JOIN sized USING (cohort)
 def ab_bucket_col() -> Column:
     """user_id -> deterministic experiment bucket 0..999 (Column)."""
     return F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("|exp1"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_long(F.concat(F.col("user_id").cast("string"), F.lit("|exp1"))),
         F.lit(1000),
     )
 
@@ -1665,24 +1648,16 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.transform(
             F.sequence(F.lit(1), F.size("ws") - 4),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            " ",
-                            F.element_at(F.col("ws"), i),
-                            F.element_at(F.col("ws"), i + 1),
-                            F.element_at(F.col("ws"), i + 2),
-                            F.element_at(F.col("ws"), i + 3),
-                            F.element_at(F.col("ws"), i + 4),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            lambda i: md5_long(
+                F.concat_ws(
+                    " ",
+                    F.element_at(F.col("ws"), i),
+                    F.element_at(F.col("ws"), i + 1),
+                    F.element_at(F.col("ws"), i + 2),
+                    F.element_at(F.col("ws"), i + 3),
+                    F.element_at(F.col("ws"), i + 4),
+                )
+            ),
         ).alias("hs"),
     )
     fps = grams.select(

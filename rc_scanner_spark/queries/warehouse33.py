@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 from .warehouse25 import SQL_EPOCH_MID_CTE, epoch_mid
 
@@ -67,15 +68,7 @@ def q_sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.unix_micros(F.col("ts")).alias("us")
     )
     mid = epoch_mid(ev.select("us"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit("|kmvset"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(F.concat(F.col("user_id").cast("string"), F.lit("|kmvset")))
     halved = ev.crossJoin(F.broadcast(mid)).select(
         F.when(F.col("us") <= F.col("mid_us"), F.lit("a"))
         .otherwise(F.lit("b"))

@@ -43,6 +43,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -952,10 +953,7 @@ def q_split_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus the fold's own partials — no second scan, no self-join."""
     d = _t(spark, sf_dir, "documents").select(
         F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16, 10,
-            ).cast("bigint"),
+            md5_long(F.col("doc_id").cast("string")),
             F.lit(_KFOLD_K),
         ).cast("int").alias("fold"),
         F.col("n_chars").cast("bigint").alias("n_chars"),

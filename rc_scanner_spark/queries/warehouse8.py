@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -70,9 +71,7 @@ def q_sample_gumbel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     ).filter(F.col("n_chars") > 0)
     u = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("bigint")
+        md5_long(F.col("doc_id").cast("string"))
         + 1
     ).cast("double") / F.lit(float(_HEX15))
     key = F.log(u) / F.col("n_chars").cast("double")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from . import QuerySpec, load_tuned
 
 _t = load_tuned
@@ -235,21 +236,13 @@ def q_profile_partition_checksums(
     disambiguates (1, "2x") from (12, "x"); NULL text hashes as ''
     by explicit contract on both sides (Spark concat NULL-propagates
     where DuckDB concat treats NULL as '')."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit("\x01"),
-                    F.coalesce(F.col("text"), F.lit("")),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_long(
+        F.concat(
+            F.col("doc_id").cast("string"),
+            F.lit("\x01"),
+            F.coalesce(F.col("text"), F.lit("")),
+        )
+    )
     docs = _t(spark, sf_dir, "documents").select(
         "source", h.alias("h")
     )

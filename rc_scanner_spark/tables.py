@@ -225,12 +225,11 @@ def invalidate_schema_cache(path: str | None = None) -> None:
     re-infers the schema."""
     if path is None:
         _DF_CACHE.clear()
-        return
-    for key in [k for k in _DF_CACHE if k[1] == path]:
-        del _DF_CACHE[key]
+    else:
+        _DF_CACHE.pop(path, None)
 
 
-# Loaded-frame memo per (session JVM, path).  A fresh load infers the
+# Loaded-frame memo per path.  A fresh load infers the
 # schema from the parquet footers (~75-100 ms/table) and pays
 # DataSource resolution, file listing, the _spread size checks and
 # _normalize_timestamps' dtypes-triggered analysis (12-28 ms/table
@@ -244,25 +243,34 @@ def invalidate_schema_cache(path: str | None = None) -> None:
 # overwrite (no writer has to remember invalidate_schema_cache) or a
 # re-configured session re-loads instead of serving a stale plan.
 # Paths where stat fails (non-local FS) stamp None: memo by path only.
-_DF_CACHE: dict[tuple[int, str], tuple[object, object, DataFrame]] = {}
+# A hit also needs the caller's session: a frame is bound to the
+# session that read it (its conf, and the catalog its temp views go
+# into), so a second session on the same SparkContext
+# (``spark.newSession()``) loads its own, which then replaces the
+# entry: one frame per path however many sessions come and go.
+_DF_CACHE: dict[str, tuple[object, object, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
-    key = (id(spark.sparkContext), path)
     stamp = _path_stamp(path)
     spread_inputs = (
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"),
         spark.sparkContext.defaultParallelism,
     )
-    cached = _DF_CACHE.get(key)
-    if cached is not None and cached[0] == stamp and cached[1] == spread_inputs:
+    cached = _DF_CACHE.get(path)
+    if (
+        cached is not None
+        and cached[0] == stamp
+        and cached[1] == spread_inputs
+        and cached[2].sparkSession is spark
+    ):
         return cached[2]
     df = _spread(spark, spark.read.parquet(path), path, name)
     df = _normalize_timestamps(df, name)
-    _DF_CACHE[key] = (stamp, spread_inputs, df)
+    _DF_CACHE[path] = (stamp, spread_inputs, df)
     return df
 
 

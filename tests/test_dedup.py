@@ -435,3 +435,61 @@ def test_prefix_jaccard_random_matches_python_brute_force(spark):
                 expect[(a, b)] = j4
         assert got == expect
         assert expect, "draw should contain at least one qualifying pair"
+
+
+_FAILURE_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy dog"),
+    (3, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+    (4, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+    (5, "completely unrelated words appear in this short document"),
+]
+
+
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "minhash_lsh_pairs_portable", "prefix_jaccard_pairs"]
+)
+def test_near_dup_failure_midway_leaks_nothing(spark, op):
+    """A near-dup query that fails inside a task (one document's text
+    is ``raise_error``) leaves the session's conf as it was, and
+    ``release_caches()`` drops the frames it persisted before failing;
+    a clean rerun then returns the brute-force pairs."""
+    from rc_scanner_spark.operators import dedup
+
+    fn = getattr(dedup, op)
+    clean = spark.createDataFrame(_FAILURE_DOCS, "doc_id long, text string")
+    broken = clean.withColumn(
+        "text",
+        F.when(F.col("doc_id") == 5, F.raise_error(F.lit("injected failure"))).otherwise(
+            F.col("text")
+        ),
+    )
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    conf = {k: spark.conf.get(k) for k in keys}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    with pytest.raises(Exception, match="injected failure"):
+        fn(broken).collect()
+    assert {k: spark.conf.get(k) for k in keys} == conf
+    dedup.release_caches()
+    assert cache.isEmpty()
+
+    got = {(r["id_a"], r["id_b"]) for r in fn(clean).collect()}
+    dedup.release_caches()
+    assert got == _brute_force_pairs(spark, clean, 0.5) == {(1, 2), (3, 4)}
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "minhash_lsh_pairs_portable"])
+@pytest.mark.parametrize("threshold", [0, -0.5])
+def test_minhash_rejects_non_positive_threshold_before_persisting(
+    spark, docs, op, threshold
+):
+    """A non-positive verify_threshold is refused at entry: nothing is
+    persisted (the cache manager stays empty) before the ValueError."""
+    from rc_scanner_spark.operators import dedup
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    dedup.release_caches()
+    with pytest.raises(ValueError, match="verify_threshold"):
+        getattr(dedup, op)(docs, verify_threshold=threshold)
+    assert cache.isEmpty()

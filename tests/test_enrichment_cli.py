@@ -269,3 +269,45 @@ def test_text_and_binaryfile_sources(spark, tmp_path):
     assert set(rows) == {"a.txt", "b.txt"}
     assert bytes(rows["a.txt"]["content"]) == b"alpha\nbeta\n"
     assert rows["b.txt"]["length"] == 6
+
+
+def test_cli_batch_refuses_stream_flag_log(spark, tmp_path):
+    """A flag-log directory written by the stream's file sink holds a
+    ``_spark_metadata`` log, and Spark's readers list only the files it
+    names: batch part files appended there would be on disk but never
+    read back.  Batch mode refuses the directory, naming it, before it
+    writes anything."""
+    import pytest
+
+    from rc_scanner_spark.cli import main
+
+    indir = tmp_path / "changes"
+    indir.mkdir()
+    write_changes_jsonl(
+        str(indir / "a.json"), [make_change(i, f"Page{i}") for i in range(2)]
+    )
+    users = tmp_path / "users.parquet"
+    spark.createDataFrame([("Alice", 5)], "user string, editcount long").write.parquet(
+        str(users)
+    )
+    revs = tmp_path / "revs.parquet"
+    spark.createDataFrame(
+        [(1000 + i, "an edit about userboxes") for i in range(2)],
+        "revid long, text string",
+    ).write.parquet(str(revs))
+    flaglog = tmp_path / "logs" / "flagged_changes"
+    (flaglog / "_spark_metadata").mkdir(parents=True)
+
+    with pytest.raises(SystemExit) as exc:
+        main(
+            [
+                "userboxes",
+                "--input", str(indir),
+                "--users", str(users),
+                "--revisions", str(revs),
+                "--out", str(tmp_path / "logs"),
+                "--log-level", "2",
+            ]
+        )
+    assert str(flaglog) in str(exc.value)
+    assert sorted(p.name for p in flaglog.iterdir()) == ["_spark_metadata"]

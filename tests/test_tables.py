@@ -279,3 +279,20 @@ def test_load_table_spreads_multi_file_directory(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "documents")
     assert _round_robin_spread(df)
     assert df.count() == 3000
+
+
+def test_df_memo_is_per_session(spark):
+    """A second session on the same SparkContext gets frames bound to
+    itself: a memo shared across the context handed it the first
+    session's frames, so ``register_views`` put its views into the
+    first session's catalog."""
+    from rc_scanner_spark.tables import register_views
+
+    from tests.conftest import SF_SMOKE
+
+    s2 = spark.newSession()
+    assert load_table(s2, SF_SMOKE, "region").sparkSession is s2
+    assert load_table(spark, SF_SMOKE, "region").sparkSession is spark
+    register_views(s2, SF_SMOKE)
+    n = s2.sql("select count(*) from region").collect()[0][0]
+    assert n == load_table(spark, SF_SMOKE, "region").count()
